@@ -19,8 +19,9 @@ The split exists because the driver's wrapper captures only the last
 dual-phase blocks) and the driver's own artifact refresh truncated it
 to unparseable ("parsed": null). The final line is now guaranteed
 <= 2000 chars (asserted) and self-sufficient for the pin contract;
-scripts/gauntlet.sh merges both lines into BENCH_<tag>.json so the
-committed artifact keeps full fidelity.
+scripts/check_bench_pins.py's merge_bench_lines joins both lines into
+one BENCH_<tag>.json object so a committed artifact keeps full
+fidelity.
 
 Recorded times are the median of 3 back-to-back timed passes after 2
 warm passes (r8: two idle same-head single-pass runs differed 20%);
@@ -553,7 +554,7 @@ HEADLINE = [
 #: Legs that re-measure retired/control configurations: run only under
 #: SPARK_GRAFT_BENCH_CONTROL=1 (r11 verdict item 5 demoted the v2
 #: session-conf control; r13 verdict item 3 demoted the static
-#: open-groups _auto twin). A cross-round "dropped" row for these is
+#: open-groups _auto twin). Their absence from a default artifact is
 #: the expected record of the demotion, not a regression.
 CONTROL_LEGS = frozenset(
     {"rollup_maintain_serve_v2", "rollup_maintain_serve_v2_auto"}
@@ -567,48 +568,6 @@ CONTROL_LEGS = frozenset(
 # "quiet" means well under one busy core.
 LOAD_GATE_1M = 1.0
 LOAD_GATE_5M = 2.0
-
-#: Idle band for `calibrate_ms` on this box (min-of-5 of the fixed
-#: elementwise-numpy workload, measured at r15 head on an idle machine
-#: — see REHEARSAL r15-calib-baseline). The band is ~1.6x the measured
-#: idle minimum: same-window idle repeats sit within ~10% of each
-#: other, while the r14 "post-suite machine mode" this stamp exists to
-#: expose ran timed legs 2-17x slow — far outside it. A stamp above
-#: the band marks the surrounding artifact's walls as taken in a
-#: degraded machine window (checkers annotate; nothing gates on it).
-CALIB_IDLE_BAND_MS = 230.0
-
-
-def calibrate_ms(runs: int = 5) -> float:
-    """Fixed-work single-thread CPU calibration: min-of-``runs`` wall
-    time (ms) of a deterministic elementwise-numpy pass. Deliberately
-    BLAS-free (r14 advisor: the first-cut 1200x1200 matmul ran on
-    2-thread OpenBLAS and spread 3.5x run-to-run, so its documented
-    ~1.8 s baseline never reproduced): elementwise ufuncs are
-    single-threaded by construction, the output buffer is preallocated
-    and warmed (first-touch page-in dominated the first pass at ~1.3 s
-    vs 28 ms steady), and the MINIMUM over runs rejects scheduler
-    preemption — a persistent machine-slow mode is the one thing that
-    moves the best-of-N of a fixed single-thread workload."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    a = rng.random(2_000_000)
-    out = np.empty_like(a)
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        np.multiply(a, 1.0000001, out=out)
-        for _ in range(40):
-            np.add(out, 0.5, out=out)
-            np.sqrt(out, out=out)
-            np.multiply(out, 1.5, out=out)
-        float(out.sum())
-        return (time.perf_counter() - t0) * 1000
-
-    one()  # warmup: page-in of the output buffer, ufunc dispatch
-    return round(min(one() for _ in range(runs)), 1)
-
 
 def _await_quiet_machine() -> tuple[float, bool]:
     """Sample load BEFORE any Spark work (the bench's own executor
@@ -637,18 +596,8 @@ def _await_quiet_machine() -> tuple[float, bool]:
 
 def main() -> None:
     load_1m, comparable = _await_quiet_machine()
-    # fixed-work CPU stamp bracketing the whole run (r14 verdict item
-    # 2's r15 follow-through): loadavg passed at 0.11-0.15 on BOTH r14
-    # gauntlet smokes that then ran x8 legs 2-17x slow — the stamp
-    # puts the machine's effective single-thread speed IN the
-    # artifact, start and end, so a degraded window is visible to the
-    # pins checker instead of costing manual dismissal runs
-    calib_start_ms = calibrate_ms()
     # control legs run only on request (r11 verdict item 5 / r13
-    # verdict item 3; see CONTROL_LEGS) — the mix drops them by
-    # default so a dropped-query row in the cross-round classification
-    # is the expected record of the demotion, not a silent
-    # disappearance
+    # verdict item 3; see CONTROL_LEGS) — the mix drops them by default
     mix = [
         q
         for q in HEADLINE
@@ -850,14 +799,6 @@ def main() -> None:
             # numbers against any pinned bar.
             "load_1m": load_1m,
             "comparable": comparable,
-            # run-bracketing CPU calibration (calibrate_ms): either
-            # stamp above the band marks a degraded machine window —
-            # START catches a pre-degraded window the load gate can't
-            # see, END catches a mode that arrived mid-run (the r14
-            # pattern: gate green, then leg loads 9-12 mid-smoke)
-            "calib_ms": calib_start_ms,
-            "calib_ms_end": calibrate_ms(),
-            "calib_band_ms": CALIB_IDLE_BAND_MS,
             # observed parallelism of THIS run (r15 verdict item 2):
             # defaultParallelism + the resolved master string prove the
             # SPARK_GRAFT_CPUS contract from the artifact alone

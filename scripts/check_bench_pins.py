@@ -9,7 +9,7 @@ pinned-sum total must stay <= 2x the pinned total.  Round 7 broke the
 contract silently (stream_session_30m grew to 3 legs under the pinned
 name); this checker makes the numeric half of the contract a command:
 
-    python scripts/check_bench_pins.py BENCH_r11.json
+    python scripts/check_bench_pins.py BENCH_r11.json [BASELINE.json]
 
 Exit 0 = every pinned name present, individually under 2x, sum under
 2x, and the artifact stamped comparable (load-gated by bench.py).
@@ -20,60 +20,13 @@ single-pass noise floor); the checker prints each pin's spread and the
 worst relative spread so the reader sees the achieved noise floor next
 to the ratios.  Since round 10 bench.py emits a compact headline line
 (last, <= 2000 chars so the driver's tail capture parses) plus a
-detail line (spread/phases); the checker accepts the gauntlet-merged
+detail line (spread/phases); the checker accepts the merged
 artifact, the compact headline alone, or a driver tail capture, and
 prints each lifecycle leg's maintain WALL next to its summed
 state-store commit I/O — the fsync axis that separates a machine I/O
 regime shift from a code regression — plus (r11) the leg's declared
 ROLE, so the artifact itself says which lifecycle number is the
 shipped default and which is the pinned session-conf control.
-
-Since round 11 the checker also diffs the artifact against the
-PREVIOUS round's (auto-discovered as the highest round-keyed
-BENCH_r*.json below the current one, or --prev PATH) and classifies
-each shared query's median delta as
-
-  * ``noise``        — the two rounds' min/max spreads overlap, the
-                       delta is inside the 20% measured single-pass
-                       floor, or the query moved WITH the mix (within
-                       tolerance of the median cross-round shift — the
-                       r9/r10 cross-process machine mode, where every
-                       query drifts 15-35% together);
-  * ``fsync-regime`` — a lifecycle leg whose wall moved WITH its
-                       summed state-commit I/O (the designed signature
-                       of a machine fsync-latency mode);
-  * ``setup``        — (r13, lifecycle legs with per-phase blocks on
-                       both sides) the wall delta lives in the SETUP
-                       phase (estimator pre-scan, staging) while the
-                       core (maintain+compact+serve) stayed inside the
-                       floors — the r12 auto_est `code` flags lumped a
-                       0.5-0.7 s pre-scan into one wall number;
-  * ``setup-code``   — (r14) the same core-flat shape but the setup
-                       delta exceeds ``SETUP_ABS_CEILING`` (~3x the
-                       known pre-scan band): too big to be staging
-                       noise, so it escalates with the same
-                       verify-with-git-diff instruction code flags
-                       carry;
-  * ``code``         — wall (core wall, when phases are present)
-                       moved beyond all of the above while commit I/O
-                       stayed flat / the mix didn't move.
-
-The classification is printed, not gated: cross-round deltas measure
-the machine as much as the code (same-head repeats on this box are
-1-5%, cross-process medians have drifted 15-35% at identical code —
-REHEARSAL.md r9/r10), so the <=2x pin contract stays the only gate and
-a ``code`` row is a loud pointer for the human, produced mechanically
-instead of by reading four artifacts (r10 verdict, round-11 item 1).
-
-Since round 12 a ``code`` verdict also requires an ABSOLUTE delta of
-at least ``ABS_CODE_FLOOR`` (100 ms): the r11 judge replay produced
-two spurious ``code`` flags on sub-0.3 s pins (+32 ms / -71 ms) at
-provably-unchanged code — on short pins the 20% relative floor is
-pure scheduler jitter. And both artifacts are IDENTIFIED (content
-sha256 + the commit that last touched them, or ``uncommitted``) in
-the classification header and summary line: the r11 builder/judge
-classifications disagreed because each compared different bytes under
-the same "vs BENCH_r11.json" label after a driver refresh.
 
 What this CANNOT catch is a pinned name silently re-routed to a
 different computation — that half of the contract lives in bench.py
@@ -84,97 +37,15 @@ holding.
 
 from __future__ import annotations
 
-import glob
 import json
-import math
-import os
-import re
-import statistics
 import sys
-
-#: r8-measured same-head single-pass noise floor (two idle runs of the
-#: identical head differed 20%); residual deltas under it are never
-#: evidence. Applied AFTER subtracting the mix's median cross-round
-#: shift — the common-mode machine drift (r10-vs-r9: every query moved
-#: +15-35% together at identical code; r10-vs-r10b: -13% median with
-#: ±17pp per-query dispersion, also at identical query code) — so the
-#: decomposition is delta = common machine mode + per-query noise, and
-#: only what exceeds BOTH is attributed to code.
-NOISE_FLOOR = 0.20
-
-#: Absolute-delta floor for a ``code`` verdict (r11 verdict item 2):
-#: on sub-0.3 s pins the 20% RELATIVE floor is a few tens of ms —
-#: pure scheduler jitter (judge replay flagged +32 ms / -71 ms deltas
-#: as ``code`` on provably-unchanged code). A code claim now needs the
-#: relative residual AND at least this much absolute movement.
-ABS_CODE_FLOOR = 0.100
-
-#: bench.py records 3-decimal medians; anything at or under a few
-#: timing-resolution steps is indistinguishable from zero (r11 advisor:
-#: a prev of 0.000 s with curr at 0.001 s must not print ``code``).
-RES_FLOOR = 0.005
-
-#: Escalation ceiling for the ``setup`` class (r13 verdict item 2):
-#: attributing a core-flat wall delta to the setup phase is only ever
-#: a benign explanation for movement the SIZE of the known setup work
-#: — the estimator pre-scan's measured band is 0.45-0.68 s (r11-r13
-#: artifacts), so 2.0 s is ~3x its top. A setup delta beyond it is a
-#: setup-PHASE code regression (say the pre-scan going 0.5 s -> 5 s):
-#: without this ceiling it would classify ``setup`` forever and never
-#: trigger the empty-diff dismissal workflow that ``code`` flags get,
-#: so above the ceiling the class escalates to ``setup-code`` and
-#: carries the same verify-with-git-diff instruction.
-SETUP_ABS_CEILING = 2.0
-
-
-def classify_calib(
-    start_ms, band, end_ms, *, source: str
-) -> tuple[bool | None, str]:
-    """The three-way calibration-stamp contract, shared by this checker
-    and check_scale_claims (r15 review: the two re-implementations had
-    already diverged — the bench side described a band-less calib_ms as
-    'no calib stamp', affirmatively false for an artifact that DOES
-    carry one).  machine_mode is None when the stamp predates the
-    calib (or carries one without its band — the short-lived r14
-    matmul form, whose baseline never reproduced: r14 advisor), so
-    callers distinguish 'idle-verified' from 'unknown'.  `source`
-    names the stamped object in the messages ('artifact' | 'block')."""
-    if start_ms is None or band is None:
-        if start_ms is not None:
-            return None, (
-                f"calib_ms {start_ms} stamped without a band (r14 "
-                "matmul-form stamp, unreliable baseline): machine mode "
-                "unknown"
-            )
-        return None, f"no calib stamp (pre-r15 {source}): machine mode unknown"
-    degraded = start_ms > band or (end_ms is not None and end_ms > band)
-    ends = f", end {end_ms}" if end_ms is not None else ", no end stamp"
-    return degraded, (
-        f"calib_ms start {start_ms}{ends} vs idle band {band} — "
-        + ("DEGRADED machine window" if degraded else "idle-band machine")
-    )
-
-
-def calib_state(artifact: dict) -> tuple[bool | None, str]:
-    """(machine_mode, description) from an artifact's run-bracketing
-    calibration stamps (r14 verdict item 2: bench.py stamps
-    `calib_ms`/`calib_ms_end` from bench.calibrate_ms plus the
-    `calib_band_ms` idle band it is read against)."""
-    return classify_calib(
-        artifact.get("calib_ms"),
-        artifact.get("calib_band_ms"),
-        artifact.get("calib_ms_end"),
-        source="artifact",
-    )
 
 
 def merge_bench_lines(lines: list[str]) -> dict | None:
     """Recover bench.py's artifact from raw stdout lines: the compact
     headline (metric=headline_query_mix_total, the LAST such line) with
     the detail line's spread/phases/roles merged in when present.
-    Returns None when no parseable headline exists. Shared by
-    gauntlet.sh's artifact merge and the driver-tail recovery below so
-    the two can't drift (r10 review)."""
+    Returns None when no parseable headline exists."""
     headline = None
     detail = None
     for ln in reversed([ln.strip() for ln in lines]):
@@ -199,7 +70,7 @@ def merge_bench_lines(lines: list[str]) -> dict | None:
 
 
 def load_artifact(path: str) -> dict | None:
-    """An artifact in any of its three shapes — gauntlet-merged object,
+    """An artifact in any of its three shapes — merged object,
     compact headline alone, or a driver capture whose bench line lives
     in a ``tail`` field — normalized to the one-object form, or None
     when nothing parseable is found."""
@@ -217,357 +88,7 @@ def load_artifact(path: str) -> dict | None:
     return run if "queries" in run else None
 
 
-#: Round-keyed artifact names: BENCH_r10.json, BENCH_r10b.json — NOT
-#: the ad-hoc BENCH_r03_IDLE_RERUN.json style reruns, which were
-#: one-off diagnostics, not rounds of record.
-_ROUND_RE = re.compile(r"^BENCH_r(\d+)([a-z]?)\.json$")
-
-
-def find_prev_artifact(bench_path: str) -> str | None:
-    """The previous round's artifact of record: the highest round-keyed
-    BENCH_r*.json in ``bench_path``'s directory strictly below the
-    current one (a same-round letter suffix like r10b sorts above r10,
-    so r11 compares against the final-head r10b). A current name
-    outside the pattern (e.g. a scratch artifact) compares against the
-    highest key present."""
-    d = os.path.dirname(os.path.abspath(bench_path)) or "."
-    cur = _ROUND_RE.match(os.path.basename(bench_path))
-    cur_key = (int(cur.group(1)), cur.group(2)) if cur else None
-    best: tuple[tuple[int, str], str] | None = None
-    for p in glob.glob(os.path.join(d, "BENCH_r*.json")):
-        if os.path.abspath(p) == os.path.abspath(bench_path):
-            continue
-        m = _ROUND_RE.match(os.path.basename(p))
-        if not m:
-            continue
-        key = (int(m.group(1)), m.group(2))
-        if cur_key is not None and key >= cur_key:
-            continue
-        if best is None or key > best[0]:
-            best = (key, p)
-    return None if best is None else best[1]
-
-
-def classify_cross_round(prev: dict, curr: dict):
-    """Classify each shared query's median delta vs the previous
-    round's artifact (module docstring: noise / fsync-regime / code).
-    Returns (rows, summary): rows are (name, prev_s, curr_s, rel_delta,
-    class, reason); summary carries the class counts, the mix's median
-    shift, and the added/dropped query names."""
-    pq, cq = prev.get("queries") or {}, curr.get("queries") or {}
-    ps, cs = prev.get("spread") or {}, curr.get("spread") or {}
-    pcio, ccio = prev.get("commit_io_s") or {}, curr.get("commit_io_s") or {}
-    pph, cph = prev.get("phases") or {}, curr.get("phases") or {}
-    shared = sorted(set(pq) & set(cq))
-    rel = {n: (cq[n] - pq[n]) / pq[n] for n in shared if pq[n] > 0}
-    mix_shift = statistics.median(rel.values()) if rel else 0.0
-    rows = []
-    counts = {
-        "noise": 0,
-        "fsync-regime": 0,
-        "setup": 0,
-        "setup-code": 0,
-        "code": 0,
-    }
-    for n in shared:
-        if pq[n] <= 0:
-            # a sub-0.5ms query rounds to med 0.000 at bench.py's
-            # 3-decimal resolution: the relative delta is undefined,
-            # and substituting 0% would print an affirmatively false
-            # "noise" verdict over an arbitrarily large blow-up
-            # (r11 review)
-            if cq[n] <= RES_FLOOR:
-                cls, why = "noise", "both medians within timing resolution"
-            elif cq[n] < ABS_CODE_FLOOR:
-                cls = "noise"
-                why = (
-                    f"prev median 0.000s (sub-resolution), curr "
-                    f"{cq[n]:.3f}s is under the {ABS_CODE_FLOOR * 1000:.0f}ms "
-                    "absolute code floor"
-                )
-            else:
-                cls = "code"
-                why = (
-                    f"prev median 0.000s (sub-resolution) is now "
-                    f"{cq[n]:.3f}s; relative delta undefined"
-                )
-            counts[cls] += 1
-            rows.append((n, pq[n], cq[n], float("nan"), cls, why))
-            continue
-        d = rel[n]
-        sp, sc = ps.get(n), cs.get(n)
-        if sp is not None and sc is not None:
-            spreads_overlap = sc["min"] <= sp["max"] and sp["min"] <= sc["max"]
-            overlap_why = "min/max spreads overlap"
-        elif sc is not None:
-            # prev is a headline-only driver artifact (no spread
-            # fields): one-sided rule — this round's own 3 passes
-            # spanned the previous round's median
-            spreads_overlap = sc["min"] <= pq[n] <= sc["max"]
-            overlap_why = "prev median inside this round's min/max spread"
-        elif sp is not None:
-            spreads_overlap = sp["min"] <= cq[n] <= sp["max"]
-            overlap_why = "this median inside prev round's min/max spread"
-        else:
-            spreads_overlap = False
-            overlap_why = ""
-        residual = d - mix_shift
-        phase_attributed = False
-        if spreads_overlap:
-            cls, why = "noise", overlap_why
-        elif n in pcio and n in ccio:
-            # lifecycle leg: it carries its own attribution axis, and
-            # at ~8-12 s wall it doesn't ride the short-query machine
-            # modes — classify by the commit-I/O signature once the
-            # wall moved past the floor
-            d_wall = cq[n] - pq[n]
-            d_cio = ccio[n] - pcio[n]
-            php, phc = pph.get(n) or {}, cph.get(n) or {}
-            if "setup" in php and "setup" in phc:
-                # r12 verdict item 5: the artifact carries per-phase
-                # walls — attribute on the CORE (maintain+compact+
-                # serve) and report the setup phase (estimator
-                # pre-scan, staging) separately instead of lumping it
-                # into one wall number; commit I/O overlaps maintain
-                # only, so it is the core's signature axis
-                phase_attributed = True
-                d_setup = phc["setup"] - php["setup"]
-                d_core = d_wall - d_setup
-                core_prev = pq[n] - php["setup"]
-                core_rel = (
-                    d_core / core_prev if core_prev > 0 else float("inf")
-                )
-                maint_txt = (
-                    f", maintain {phc['maintain'] - php['maintain']:+.2f}s"
-                    if "maintain" in php and "maintain" in phc
-                    else ""
-                )
-                if abs(d_core) < ABS_CODE_FLOOR or abs(core_rel) <= NOISE_FLOOR:
-                    if abs(d_setup) > SETUP_ABS_CEILING:
-                        # r13 verdict item 2: the setup class had no
-                        # upper bound, so a genuine pre-scan code
-                        # regression would hide in it forever —
-                        # beyond ~3x the known pre-scan band it gets
-                        # the code-flag treatment (escalated, with the
-                        # dismissal instruction)
-                        cls = "setup-code"
-                        why = (
-                            f"setup {d_setup:+.2f}s exceeds the "
-                            f"{SETUP_ABS_CEILING:.1f}s setup ceiling "
-                            f"(~3x the 0.45-0.68s pre-scan band; core "
-                            f"{d_core:+.2f}s{maint_txt} inside floors) "
-                            "— a setup-PHASE code change, not staging "
-                            "noise: verify with git diff over the "
-                            "estimator/setup path (estimate_open_groups"
-                            "/cached_open_groups/_rollup_events_src) "
-                            "and a same-head repeat"
-                        )
-                    elif abs(d_setup) >= ABS_CODE_FLOOR:
-                        cls = "setup"
-                        why = (
-                            f"wall {d_wall:+.2f}s is setup-phase movement "
-                            f"(setup {d_setup:+.2f}s; core {d_core:+.2f}s"
-                            f"{maint_txt} inside floors) — pre-scan/"
-                            "staging cost, not maintain"
-                        )
-                    else:
-                        cls = "noise"
-                        why = (
-                            f"core {d_core:+.2f}s ({core_rel:+.0%}) and "
-                            f"setup {d_setup:+.2f}s both inside the "
-                            "20%/100ms floors"
-                        )
-                elif (d_core > 0) == (d_cio > 0) and abs(d_cio) >= 0.5 * abs(
-                    d_core
-                ):
-                    cls = "fsync-regime"
-                    why = (
-                        f"core wall {d_core:+.2f}s moved WITH commit-I/O "
-                        f"{d_cio:+.2f}s (machine fsync mode; setup "
-                        f"{d_setup:+.2f}s separate)"
-                    )
-                else:
-                    cls = "code"
-                    why = (
-                        f"core wall {d_core:+.2f}s{maint_txt} but "
-                        f"commit-I/O {d_cio:+.2f}s — not the fsync "
-                        f"signature (setup {d_setup:+.2f}s reported "
-                        "separately)"
-                    )
-            elif abs(d) <= NOISE_FLOOR:
-                cls = "noise"
-                why = f"|{d:+.0%}| wall inside the 20% single-pass floor"
-            elif (d_wall > 0) == (d_cio > 0) and abs(d_cio) >= 0.5 * abs(d_wall):
-                cls = "fsync-regime"
-                why = (
-                    f"wall {d_wall:+.2f}s moved WITH commit-I/O "
-                    f"{d_cio:+.2f}s (machine fsync mode)"
-                )
-            else:
-                cls = "code"
-                why = (
-                    f"wall {d_wall:+.2f}s but commit-I/O only "
-                    f"{d_cio:+.2f}s — not the fsync signature"
-                )
-        elif abs(d) <= NOISE_FLOOR:
-            cls, why = "noise", f"|{d:+.0%}| inside the 20% single-pass floor"
-        elif abs(residual) <= NOISE_FLOOR:
-            cls = "noise"
-            why = (
-                f"residual {residual:+.0%} after the mix's {mix_shift:+.0%} "
-                "common shift is inside the 20% floor"
-            )
-        else:
-            cls = "code"
-            why = (
-                f"{d:+.0%} exceeds the 20% floor both outright and as "
-                f"residual ({residual:+.0%}) after the mix's "
-                f"{mix_shift:+.0%} common shift"
-            )
-        if (
-            cls == "code"
-            and not phase_attributed
-            and abs(cq[n] - pq[n]) < ABS_CODE_FLOOR
-        ):
-            # r11 verdict item 2: a code claim needs absolute movement
-            # too — a 20%-relative blip on a 0.15 s pin is tens of ms
-            # of scheduler jitter, not evidence. (The phase-attributed
-            # path applied the floor to the CORE delta already — a
-            # core regression offset by a setup improvement must not
-            # demote on the netted total.)
-            cls = "noise"
-            why = (
-                f"{cq[n] - pq[n]:+.3f}s absolute delta is under the "
-                f"{ABS_CODE_FLOOR * 1000:.0f}ms code floor (was: {why})"
-            )
-        counts[cls] += 1
-        rows.append((n, pq[n], cq[n], d, cls, why))
-    summary = {
-        "counts": counts,
-        "mix_shift": mix_shift,
-        "added": sorted(set(cq) - set(pq)),
-        "dropped": sorted(set(pq) - set(cq)),
-    }
-    return rows, summary
-
-
-def artifact_id(path: str) -> str:
-    """Compact identity of an artifact FILE: content sha256 prefix plus
-    either the short hash of the commit that last touched it (when the
-    working copy matches HEAD) or ``uncommitted``. r11 verdict item 4:
-    the builder's classification (22/0/0) and the judge's replay
-    (20/0/2) were both labeled "vs BENCH_r11.json" but compared
-    different bytes — a driver refresh had rewritten the file after the
-    gauntlet ran. Naming the exact bytes (and whether git has them) in
-    the classification output makes the two runs distinguishable."""
-    import hashlib
-    import subprocess
-
-    try:
-        with open(path, "rb") as f:
-            digest = hashlib.sha256(f.read()).hexdigest()[:12]
-    except OSError:
-        return "unreadable"
-    git = "no-git"
-    # absolute path on both sides: `git -C` resolves relative pathspecs
-    # against ITS directory, not the caller's cwd
-    apath = os.path.abspath(path)
-    d = os.path.dirname(apath) or "."
-    try:
-        dirty = subprocess.run(
-            ["git", "-C", d, "status", "--porcelain", "--", apath],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if dirty.returncode == 0:
-            if dirty.stdout.strip():
-                git = "uncommitted"
-            else:
-                head = subprocess.run(
-                    ["git", "-C", d, "log", "-1", "--format=%h", "--", apath],
-                    capture_output=True,
-                    text=True,
-                    timeout=10,
-                )
-                if head.returncode == 0 and head.stdout.strip():
-                    git = head.stdout.strip()
-    except (OSError, subprocess.SubprocessError):
-        pass
-    return f"sha256:{digest}@{git}"
-
-
-def print_cross_round(
-    prev_path: str, prev: dict, curr: dict, curr_path: str | None = None
-) -> None:
-    label = os.path.basename(prev_path)
-    # name the exact bytes being compared on both sides — carried into
-    # the final summary line (which gauntlet.sh copies to REHEARSAL.md)
-    # so two classifications under the same label are distinguishable;
-    # the sf-mismatch record carries them too (r12 review: it was the
-    # one cross-round line that couldn't name its bytes)
-    ids = f"prev {artifact_id(prev_path)}"
-    if curr_path is not None:
-        ids += f", curr {artifact_id(curr_path)}"
-    if prev.get("sf") != curr.get("sf"):
-        print(
-            f"cross-round vs {label}: sf mismatch ({prev.get('sf')} vs "
-            f"{curr.get('sf')}) — deltas across scale factors mean "
-            f"nothing, skipping classification ({ids})"
-        )
-        return
-    rows, summary = classify_cross_round(prev, curr)
-    if not rows:
-        print(f"cross-round vs {label}: no shared queries to classify ({ids})")
-        return
-    print(f"cross-round delta classification vs {label} ({ids}):")
-    # pessimistic like check()'s own gate: a MISSING comparable stamp
-    # is treated as not-comparable, not quietly trusted (r11 review —
-    # the two defaults used to disagree)
-    if not (prev.get("comparable", False) and curr.get("comparable", False)):
-        print(
-            "  CAVEAT: at least one artifact is stamped (or defaults to) "
-            "comparable=false — classes below lean noise by construction"
-        )
-    # r14 verdict item 2: when either side's calibration stamps record
-    # a degraded machine window, every escalating class below carries
-    # the attribution mechanically — cross-window walls on a machine
-    # the stamps themselves show is bimodal are machine evidence first
-    degraded_sides = []
-    for side, art in (("prev", prev), ("curr", curr)):
-        mode, txt = calib_state(art)
-        if mode:
-            degraded_sides.append(side)
-            print(f"  CAVEAT: {side} artifact taken in a degraded machine window ({txt})")
-    mm_attrib = (
-        f" [auto-attributed to machine mode: {'/'.join(degraded_sides)} "
-        "calib stamp outside the idle band]"
-        if degraded_sides
-        else ""
-    )
-    for name, p, c, d, cls, why in rows:
-        d_txt = f"{d:+6.1%}" if math.isfinite(d) else "   n/a"
-        escal = mm_attrib if cls in ("code", "setup-code") else ""
-        print(
-            f"  {name:32s} {p:7.3f}s -> {c:7.3f}s  {d_txt}  "
-            f"{cls:12s} {why}{escal}"
-        )
-    for key in ("added", "dropped"):
-        if summary[key]:
-            print(f"  {key} since {label}: {', '.join(summary[key])}")
-    counts = summary["counts"]
-    print(
-        f"cross-round vs {label}: {counts['noise']} noise / "
-        f"{counts['fsync-regime']} fsync-regime / "
-        f"{counts.get('setup', 0)} setup / "
-        f"{counts.get('setup-code', 0)} setup-code / {counts['code']} code "
-        f"(mix median shift {summary['mix_shift']:+.1%} over {len(rows)} "
-        f"shared queries; {ids}; informational — the <=2x pin contract "
-        "gates)"
-    )
-
-
-def check(baseline_path: str, bench_path: str, prev_path: str | None = None) -> int:
+def check(baseline_path: str, bench_path: str) -> int:
     with open(baseline_path) as f:
         base = json.load(f)
     run = load_artifact(bench_path)
@@ -690,34 +211,6 @@ def check(baseline_path: str, bench_path: str, prev_path: str | None = None) -> 
         f"({len(rows)}/{len(pins)} pins present{missing_txt}, "
         f"load_1m={run.get('load_1m')}{spread_txt})"
     )
-    # machine-mode stamp (informational, never gates — the <=2x pin
-    # contract stays the only gate; a breach in a degraded window still
-    # fails and still means re-run idle)
-    _, calib_txt = calib_state(run)
-    print(f"machine window: {calib_txt}")
-
-    # Cross-round classification (informational; r10 verdict item 1).
-    # Any failure to find/load the previous artifact is reported, never
-    # fatal: the first round, a fresh clone, or a scratch dir simply
-    # has no previous round of record.
-    if prev_path != "":
-        prev_path = prev_path or find_prev_artifact(bench_path)
-        if prev_path is None:
-            print("cross-round: no previous round-keyed artifact found")
-        else:
-            try:
-                prev = load_artifact(prev_path)
-            except (OSError, ValueError) as e:
-                prev = None
-                print(f"cross-round: could not load {prev_path}: {e}")
-            else:
-                if prev is None:
-                    print(
-                        f"cross-round: no parseable bench data in "
-                        f"{prev_path} (pre-r10 truncated tail?)"
-                    )
-            if prev is not None:
-                print_cross_round(prev_path, prev, run, curr_path=bench_path)
 
     if problems:
         for p in problems:
@@ -728,37 +221,7 @@ def check(baseline_path: str, bench_path: str, prev_path: str | None = None) -> 
 
 
 if __name__ == "__main__":
-    argv = list(sys.argv[1:])
-    prev: str | None = None
-    if "--no-prev" in argv:
-        argv.remove("--no-prev")
-        prev = ""  # sentinel: skip the cross-round section entirely
-    for i, a in enumerate(argv):
-        if a == "--prev":
-            if i + 1 >= len(argv):
-                sys.exit("--prev requires a path argument")
-            prev = argv[i + 1]
-            del argv[i : i + 2]
-            break
-        if a.startswith("--prev="):
-            prev = a.split("=", 1)[1]
-            argv.remove(a)
-            break
-    if argv:
-        bench = argv[0]
-    else:
-        # bare invocation: check the NEWEST round-keyed artifact in the
-        # cwd instead of a hardcoded name that goes stale every round
-        # (r11 review — the r08 default had already been bumped once);
-        # a non-round-keyed probe name makes find_prev_artifact return
-        # the highest key present
-        bench = find_prev_artifact(os.path.join(os.getcwd(), "zz-latest"))
-        if bench is None:
-            sys.exit(
-                "usage: check_bench_pins.py BENCH_<tag>.json "
-                "[BASELINE.json] [--prev PATH | --no-prev] "
-                "(no BENCH_r*.json found in cwd to default to)"
-            )
-        print(f"# defaulting to newest artifact: {os.path.basename(bench)}")
-    baseline = argv[1] if len(argv) > 1 else "BENCH_BASELINE.json"
-    sys.exit(check(baseline, bench, prev_path=prev))
+    if not 2 <= len(sys.argv) <= 3:
+        sys.exit("usage: check_bench_pins.py BENCH_<tag>.json [BASELINE.json]")
+    baseline = sys.argv[2] if len(sys.argv) > 2 else "BENCH_BASELINE.json"
+    sys.exit(check(baseline, sys.argv[1]))

@@ -63,13 +63,6 @@ def test_bench_emits_contract_json():
         isinstance(v, float) for v in payload["queries"].values()
     )
     assert {"load_1m", "comparable"} <= set(payload)
-    # r15 (r14 verdict item 2): run-bracketing CPU calibration rides
-    # the HEADLINE line (so driver tail captures keep it) with the
-    # idle band it is read against — the artifact self-describes its
-    # machine window instead of relying on the loadavg gate both r14
-    # degraded smokes passed
-    assert {"calib_ms", "calib_ms_end", "calib_band_ms"} <= set(payload)
-    assert payload["calib_ms"] > 0 and payload["calib_ms_end"] > 0
     # r9: per-query noise-floor fields — 3 timed passes, min<=med<=max
     # per query, and the headline per-query number IS the median
     assert payload["timed_passes"] == 3
@@ -136,10 +129,9 @@ def test_bench_emits_contract_json():
 
 
 def test_merge_bench_lines_recovery_shapes():
-    """The one shared merge implementation behind both the gauntlet
-    artifact and the driver-tail recovery (r10 review: two diverging
-    copies): headline+detail merge, headline-only tails, mid-object
-    cut detail lines, and the no-headline failure mode."""
+    """The merge behind the driver-tail recovery: headline+detail
+    merge, headline-only tails, mid-object cut detail lines, and the
+    no-headline failure mode."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     from check_bench_pins import merge_bench_lines
 
@@ -187,33 +179,9 @@ def test_merge_bench_lines_recovery_shapes():
     }
 
 
-def test_find_prev_artifact(tmp_path):
-    """Cross-round auto-discovery: highest round-keyed BENCH_r*.json
-    strictly below the current one; letter suffixes sort above their
-    base round (r11 compares against the final-head r10b); ad-hoc
-    diagnostic names never match."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import find_prev_artifact
-
-    for n in (
-        "BENCH_r09.json",
-        "BENCH_r10.json",
-        "BENCH_r10b.json",
-        "BENCH_r03_IDLE_RERUN.json",  # diagnostic rerun: not a round
-    ):
-        (tmp_path / n).write_text("{}")
-    p = lambda n: str(tmp_path / n)  # noqa: E731
-    assert find_prev_artifact(p("BENCH_r11.json")) == p("BENCH_r10b.json")
-    assert find_prev_artifact(p("BENCH_r10b.json")) == p("BENCH_r10.json")
-    assert find_prev_artifact(p("BENCH_r10.json")) == p("BENCH_r09.json")
-    assert find_prev_artifact(p("BENCH_r09.json")) is None
-    # a non-round-keyed current name compares against the newest round
-    assert find_prev_artifact(p("scratch.json")) == p("BENCH_r10b.json")
-
-
 def test_load_artifact_shapes(tmp_path):
-    """The three artifact shapes the checker accepts: gauntlet-merged
-    object, driver capture with a recoverable tail, driver capture
+    """The three artifact shapes the checker accepts: merged object,
+    driver capture with a recoverable tail, driver capture
     whose tail is unrecoverable but whose own parse succeeded — and
     the genuinely-empty pre-r10 case."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
@@ -241,11 +209,9 @@ def test_load_artifact_shapes(tmp_path):
     assert load_artifact(str(dead)) is None
 
 
-def test_check_exit_codes_and_cross_round_print(tmp_path, capsys):
-    """The pin-contract gate the gauntlet exits on: 0 for a comparable
-    in-bar artifact, 1 for an over-2x pin, a missing pin, or a
-    not-comparable stamp — and the cross-round section prints its
-    classified one-liner without ever affecting the exit code."""
+def test_check_exit_codes(tmp_path, capsys):
+    """The pin-contract gate: 0 for a comparable in-bar artifact, 1 for
+    an over-2x pin, a missing pin, or a not-comparable stamp."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     from check_bench_pins import check
 
@@ -254,7 +220,7 @@ def test_check_exit_codes_and_cross_round_print(tmp_path, capsys):
         json.dumps({"total": 2.0, "sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0}})
     )
 
-    def art(name, queries, comparable=True):
+    def art(name, queries, comparable=True, sf=0.1):
         p = tmp_path / name
         p.write_text(
             json.dumps(
@@ -262,7 +228,7 @@ def test_check_exit_codes_and_cross_round_print(tmp_path, capsys):
                     "metric": "headline_query_mix_total",
                     "value": sum(queries.values()),
                     "queries": queries,
-                    "sf": 0.1,
+                    "sf": sf,
                     "comparable": comparable,
                     "load_1m": 0.1,
                 }
@@ -270,14 +236,9 @@ def test_check_exit_codes_and_cross_round_print(tmp_path, capsys):
         )
         return str(p)
 
-    prev = art("BENCH_r01.json", {"q1": 1.0, "q2": 1.0})
     good = art("BENCH_r02.json", {"q1": 1.1, "q2": 0.9})
     assert check(str(base), good) == 0
-    out = capsys.readouterr().out
-    assert "pin contract: OK" in out
-    # the cross-round classifier found r01 next door and printed its
-    # verdict line (informational)
-    assert "cross-round vs BENCH_r01.json:" in out
+    assert "pin contract: OK" in capsys.readouterr().out
 
     # a single pin over 2x fails even though the sum is in-bar
     assert check(str(base), art("BENCH_r03.json", {"q1": 2.5, "q2": 0.1})) == 1
@@ -288,620 +249,6 @@ def test_check_exit_codes_and_cross_round_print(tmp_path, capsys):
         check(str(base), art("BENCH_r05.json", {"q1": 1.0, "q2": 1.0}, False))
         == 1
     )
-    # --no-prev sentinel: the cross-round section is skipped entirely
-    capsys.readouterr()
-    assert check(str(base), good, prev_path="") == 0
-    assert "cross-round" not in capsys.readouterr().out
-
-
-def _mk_run(queries, spread=None, commit_io=None):
-    run = {"queries": queries, "comparable": True}
-    if spread is not None:
-        run["spread"] = spread
-    if commit_io is not None:
-        run["commit_io_s"] = commit_io
-    return run
-
-
-def test_classify_cross_round_classes():
-    """One synthetic case per classification path (r10 verdict item 1:
-    the classifier exists so the r10-vs-r9 cross-process drift never
-    again takes a human four artifacts to dismiss):
-
-    * spreads overlap -> noise, even at a large median delta;
-    * one-sided: prev is a headline-only driver artifact, its median
-      inside this round's min/max -> noise;
-    * uniform drift: every query +25% (cross-process machine mode) ->
-      noise via the mix-median common shift;
-    * single-query +60% against a flat mix -> code;
-    * lifecycle wall moving WITH commit-I/O -> fsync-regime;
-    * lifecycle wall moving with commit-I/O flat -> code.
-    """
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import classify_cross_round
-
-    def classes(rows):
-        return {r[0]: r[4] for r in rows}
-
-    # spreads overlap -> noise even at +35%
-    prev = _mk_run({"a": 1.0}, spread={"a": {"min": 0.9, "med": 1.0, "max": 1.4}})
-    curr = _mk_run({"a": 1.35}, spread={"a": {"min": 1.3, "med": 1.35, "max": 1.5}})
-    rows, summary = classify_cross_round(prev, curr)
-    assert classes(rows) == {"a": "noise"} and "overlap" in rows[0][5]
-
-    # one-sided (prev headline-only): prev median inside current spread
-    prev = _mk_run({"a": 1.0})
-    curr = _mk_run({"a": 1.3}, spread={"a": {"min": 0.95, "med": 1.3, "max": 1.4}})
-    rows, _ = classify_cross_round(prev, curr)
-    assert classes(rows) == {"a": "noise"} and "prev median inside" in rows[0][5]
-
-    # uniform +25% drift across the mix -> all noise (the r9/r10 mode);
-    # spreads deliberately tight and non-overlapping so only the
-    # common-shift rule can clear them
-    qs_prev = {f"q{i}": 1.0 for i in range(6)}
-    qs_curr = {f"q{i}": 1.25 for i in range(6)}
-    sp = lambda t: {"min": t - 0.01, "med": t, "max": t + 0.01}  # noqa: E731
-    rows, summary = classify_cross_round(
-        _mk_run(qs_prev, spread={k: sp(1.0) for k in qs_prev}),
-        _mk_run(qs_curr, spread={k: sp(1.25) for k in qs_curr}),
-    )
-    assert set(classes(rows).values()) == {"noise"}
-    assert abs(summary["mix_shift"] - 0.25) < 1e-9
-
-    # one query +60% against a flat mix -> code; the rest noise
-    qs_prev = {f"q{i}": 1.0 for i in range(5)} | {"hot": 1.0}
-    qs_curr = {f"q{i}": 1.0 for i in range(5)} | {"hot": 1.6}
-    rows, summary = classify_cross_round(
-        _mk_run(qs_prev, spread={k: sp(1.0) for k in qs_prev}),
-        _mk_run(
-            qs_curr,
-            spread={k: sp(v) for k, v in qs_curr.items()},
-        ),
-    )
-    got = classes(rows)
-    assert got["hot"] == "code"
-    assert all(v == "noise" for k, v in got.items() if k != "hot")
-    assert summary["counts"]["code"] == 1
-
-    # lifecycle legs: wall +4s WITH commit-I/O +5s -> fsync-regime;
-    # wall +4s with commit-I/O flat -> code
-    prev = _mk_run(
-        {"fsync_leg": 8.0, "code_leg": 8.0},
-        spread={"fsync_leg": sp(8.0), "code_leg": sp(8.0)},
-        commit_io={"fsync_leg": 5.0, "code_leg": 5.0},
-    )
-    curr = _mk_run(
-        {"fsync_leg": 12.0, "code_leg": 12.0},
-        spread={"fsync_leg": sp(12.0), "code_leg": sp(12.0)},
-        commit_io={"fsync_leg": 10.0, "code_leg": 5.1},
-    )
-    rows, summary = classify_cross_round(prev, curr)
-    got = classes(rows)
-    assert got == {"fsync_leg": "fsync-regime", "code_leg": "code"}
-
-    # added/dropped names are surfaced, not silently ignored
-    rows, summary = classify_cross_round(
-        _mk_run({"a": 1.0, "old": 1.0}), _mk_run({"a": 1.0, "new": 1.0})
-    )
-    assert summary["added"] == ["new"] and summary["dropped"] == ["old"]
-
-    # prev median 0.000 (sub-resolution): the relative delta is
-    # undefined — a 0.5s blow-up must NOT print as "+0% noise"
-    # (r11 review), while 0.000 -> 0.000 stays noise
-    rows, _ = classify_cross_round(
-        _mk_run({"tiny": 0.0, "blown": 0.0}),
-        _mk_run({"tiny": 0.0, "blown": 0.5}),
-    )
-    got = classes(rows)
-    assert got == {"tiny": "noise", "blown": "code"}
-    assert "undefined" in [r for r in rows if r[0] == "blown"][0][5]
-
-
-def test_classify_absolute_code_floor():
-    """r11 verdict item 2: a ``code`` verdict needs ABSOLUTE movement
-    too. The judge's replay flagged +32 ms (0.144 -> 0.176 s) and
-    -71 ms deltas as ``code`` on provably-unchanged code — on sub-0.3 s
-    pins the 20% relative floor is scheduler jitter."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import classify_cross_round
-
-    def classes(rows):
-        return {r[0]: r[4] for r in rows}
-
-    sp = lambda t: {"min": t - 0.001, "med": t, "max": t + 0.001}  # noqa: E731
-
-    # a 30ms blip on a 0.15s pin in a flat mix: +21% relative (past the
-    # relative floor, spreads disjoint) but 30ms absolute -> noise
-    qs_prev = {f"q{i}": 1.0 for i in range(5)} | {"blip": 0.146}
-    qs_curr = {f"q{i}": 1.0 for i in range(5)} | {"blip": 0.176}
-    rows, summary = classify_cross_round(
-        _mk_run(qs_prev, spread={k: sp(v) for k, v in qs_prev.items()}),
-        _mk_run(qs_curr, spread={k: sp(v) for k, v in qs_curr.items()}),
-    )
-    assert classes(rows)["blip"] == "noise"
-    assert "absolute delta" in [r for r in rows if r[0] == "blip"][0][5]
-    assert summary["counts"]["code"] == 0
-
-    # the same relative move with real absolute weight stays code
-    qs_prev["blip"], qs_curr["blip"] = 1.46, 1.76
-    rows, _ = classify_cross_round(
-        _mk_run(qs_prev, spread={k: sp(v) for k, v in qs_prev.items()}),
-        _mk_run(qs_curr, spread={k: sp(v) for k, v in qs_curr.items()}),
-    )
-    assert classes(rows)["blip"] == "code"
-
-    # sub-resolution prev (advisor): curr one timing step up is noise,
-    # curr under the 100ms absolute floor is noise, past it is code
-    rows, _ = classify_cross_round(
-        _mk_run({"step": 0.0, "small": 0.0, "big": 0.0}),
-        _mk_run({"step": 0.001, "small": 0.05, "big": 0.2}),
-    )
-    assert classes(rows) == {"step": "noise", "small": "noise", "big": "code"}
-
-
-def test_artifact_id_names_bytes(tmp_path):
-    """r11 verdict item 4: the classification names the exact bytes on
-    both sides. Content hash always; git state when resolvable."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import artifact_id
-
-    p = tmp_path / "BENCH_rX.json"
-    p.write_text('{"queries": {}}')
-    ident = artifact_id(str(p))
-    assert ident.startswith("sha256:")
-    # same bytes -> same id; different bytes -> different id
-    assert artifact_id(str(p)) == ident
-    p.write_text('{"queries": {"q": 1}}')
-    assert artifact_id(str(p)) != ident
-    # a committed artifact of this repo resolves to a commit hash
-    committed = os.path.join(REPO, "BENCH_BASELINE.json")
-    if os.path.exists(committed):
-        ident2 = artifact_id(committed)
-        assert ident2.startswith("sha256:") and "@" in ident2
-
-
-def test_classify_phase_aware_lifecycle():
-    """r12 verdict item 5: lifecycle legs carry per-phase walls in the
-    artifact — the classifier attributes on the CORE (wall minus the
-    setup phase) and reports setup (estimator pre-scan, staging)
-    separately, instead of lumping a 0.5-0.7 s pre-scan into one wall
-    number and flagging it `code`."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import classify_cross_round
-
-    def classes(rows):
-        return {r[0]: r[4] for r in rows}
-
-    def why(rows, name):
-        return [r for r in rows if r[0] == name][0][5]
-
-    sp = lambda t: {"min": t - 0.01, "med": t, "max": t + 0.01}  # noqa: E731
-
-    def leg_run(wall, setup, cio):
-        run = _mk_run(
-            {"leg": wall}, spread={"leg": sp(wall)}, commit_io={"leg": cio}
-        )
-        run["phases"] = {
-            "leg": {
-                "setup": setup,
-                "maintain": round(wall - setup - 0.2, 3),
-                "compact": 0.1,
-                "serve": 0.1,
-                "commit_io_s": cio,
-            }
-        }
-        return run
-
-    # setup-only move: wall +30% but every added second is the setup
-    # phase (core flat, commit-I/O flat) -> its own category, not code
-    rows, summary = classify_cross_round(
-        leg_run(2.0, 0.1, 1.0), leg_run(2.6, 0.7, 1.0)
-    )
-    assert classes(rows) == {"leg": "setup"}
-    assert "setup-phase movement" in why(rows, "leg")
-    assert summary["counts"]["setup"] == 1 and summary["counts"]["code"] == 0
-
-    # core regression with flat commit-I/O -> code, naming the core
-    rows, _ = classify_cross_round(
-        leg_run(2.0, 0.1, 1.0), leg_run(3.0, 0.1, 1.05)
-    )
-    assert classes(rows) == {"leg": "code"}
-    assert "core wall" in why(rows, "leg")
-
-    # core moving WITH commit-I/O -> fsync-regime (machine mode)
-    rows, _ = classify_cross_round(
-        leg_run(2.0, 0.1, 1.0), leg_run(5.0, 0.1, 4.0)
-    )
-    assert classes(rows) == {"leg": "fsync-regime"}
-
-    # a core regression MASKED by a setup improvement: netted wall is
-    # flat (and under the absolute floor) but the core moved +0.75s
-    # against flat commit-I/O — the phase split must still flag code
-    rows, _ = classify_cross_round(
-        leg_run(3.0, 1.0, 1.0), leg_run(2.95, 0.2, 1.0)
-    )
-    assert classes(rows) == {"leg": "code"}
-
-    # both phases inside floors at a small wall move -> noise
-    rows, _ = classify_cross_round(
-        leg_run(2.0, 0.1, 1.0), leg_run(2.08, 0.14, 1.0)
-    )
-    assert classes(rows) == {"leg": "noise"}
-
-    # a prev artifact WITHOUT phase blocks (driver headline capture)
-    # falls back to the r11 whole-wall rule — no crash, no setup class
-    prev = _mk_run({"leg": 2.0}, commit_io={"leg": 1.0})
-    rows, _ = classify_cross_round(prev, leg_run(2.6, 0.7, 2.5))
-    assert classes(rows)["leg"] in ("noise", "fsync-regime", "code")
-
-
-def test_classify_setup_code_escalation():
-    """r13 verdict item 2: the `setup` class had no upper bound — a
-    genuine code regression in the pre-scan itself (0.5 s -> 5 s) would
-    classify `setup` forever and never trigger the empty-diff dismissal
-    workflow `code` flags get. Beyond SETUP_ABS_CEILING (~3x the known
-    pre-scan band) the class escalates to `setup-code` and carries the
-    verify-with-git-diff instruction."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import SETUP_ABS_CEILING, classify_cross_round
-
-    sp = lambda t: {"min": t - 0.01, "med": t, "max": t + 0.01}  # noqa: E731
-
-    def leg_run(wall, setup, cio):
-        run = _mk_run(
-            {"leg": wall}, spread={"leg": sp(wall)}, commit_io={"leg": cio}
-        )
-        run["phases"] = {
-            "leg": {
-                "setup": setup,
-                "maintain": round(wall - setup - 0.2, 3),
-                "compact": 0.1,
-                "serve": 0.1,
-                "commit_io_s": cio,
-            }
-        }
-        return run
-
-    # the verdict's example: pre-scan 0.5 s -> 5 s at flat core and
-    # flat commit-I/O — escalates instead of hiding in `setup`
-    rows, summary = classify_cross_round(
-        leg_run(2.5, 0.5, 1.0), leg_run(7.0, 5.0, 1.0)
-    )
-    name, _, _, _, cls, why = rows[0]
-    assert (name, cls) == ("leg", "setup-code")
-    assert "git diff" in why and "estimator" in why
-    assert summary["counts"]["setup-code"] == 1
-    assert summary["counts"]["code"] == 0
-
-    # a setup IMPROVEMENT of the same magnitude escalates too (the
-    # r14 persisted-estimate change is exactly this shape: the reader
-    # should verify it against the diff that claims it, not wave it by)
-    rows, summary = classify_cross_round(
-        leg_run(7.0, 5.0, 1.0), leg_run(2.5, 0.5, 1.0)
-    )
-    assert rows[0][4] == "setup-code"
-
-    # at/below the ceiling the benign `setup` class is unchanged
-    just_under = SETUP_ABS_CEILING - 0.1
-    rows, summary = classify_cross_round(
-        leg_run(2.0, 0.1, 1.0), leg_run(2.0 + just_under, 0.1 + just_under, 1.0)
-    )
-    assert rows[0][4] == "setup"
-    assert summary["counts"]["setup-code"] == 0
-
-
-def test_check_scale_claims_derives_outliers():
-    """r12 verdict item 2: the SCALE.md claims are DERIVED from the
-    appended raw JSON — a rising sec/Mrow leg and a skew hotspot are
-    flagged as outliers (with per-leg load context when recorded)
-    instead of being glossed by hand prose, and the skew-split flag is
-    checked against its designed engage-at-skew-only pattern."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_scale_claims import derive, parse_blocks
-
-    text = (
-        "### Gauntlet run rX (2026-08-16T00:00:00Z, head abc1234, "
-        "load at start 0.5)\n\n"
-        "```json\n"
-        '{"meta": "scale_smoke", "load_1m_start": 0.4, "comparable": true}\n'
-        '{"op": "good", "curve": {"sf0.01": {"rows_in": 100, "sec": 1.0,'
-        ' "sec_per_mrow": 10000.0}, "sf0.1": {"rows_in": 1000, "sec": 1.2,'
-        ' "sec_per_mrow": 1200.0}}}\n'
-        '{"op": "bad", "curve": {"sf0.01": {"rows_in": 100, "sec": 0.1,'
-        ' "sec_per_mrow": 1000.0}, "sf0.1": {"rows_in": 1000, "sec": 5.0,'
-        ' "sec_per_mrow": 5000.0, "load_1m": [3.5, 4.0]}}}\n'
-        '{"op": "skewop", "curve": {"sf0.1x8": {"rows_in": 8000, "sec": 1.0,'
-        ' "sec_per_mrow": 125.0, "skew_split_engaged": false},'
-        ' "sf0.1x8skew": {"rows_in": 8000, "sec": 3.0,'
-        ' "sec_per_mrow": 375.0, "skew_split_engaged": true}}}\n'
-        "```\n"
-    )
-    blocks = parse_blocks(text)
-    assert len(blocks) == 1
-    assert blocks[0]["meta"]["comparable"] is True
-    lines, outliers = derive(blocks[0])
-    joined = "\n".join(lines)
-    assert outliers == 2
-    assert "OUTLIER (rising sec/Mrow): bad" in joined
-    assert "leg load 3.5->4.0" in joined
-    assert "OUTLIER (skew hotspot): skewop" in joined
-    assert "skew_split_engaged true at the skew point only (as designed" in joined
-    # the monotone op is claimed monotone, not flagged
-    assert "flat-or-falling (tol +25%) through the uniform points for 2/3" in joined
-
-
-def test_calibrate_ms_fixed_work_smoke():
-    """bench.calibrate_ms: deterministic fixed work, min-of-N, BLAS-free
-    (r14 advisor: the matmul form spread 3.5x run-to-run on 2-thread
-    OpenBLAS, so its documented baseline never reproduced). The smoke
-    pins the contract — positive, finite, and fast enough to bracket
-    every timing artifact — not a timing band (machine-dependent)."""
-    sys.path.insert(0, REPO)
-    from bench import CALIB_IDLE_BAND_MS, calibrate_ms
-
-    ms = calibrate_ms(runs=3)
-    assert 0 < ms < 60_000
-    assert CALIB_IDLE_BAND_MS > 0
-
-
-def test_calib_state_three_generations():
-    """Both checkers read the same three-way contract: no stamp ->
-    unknown (None), stamp without band (the short-lived r14 matmul
-    form) -> unknown, v2 stamp -> boolean against the artifact's OWN
-    band (each artifact carries the band its workload was measured
-    against, so a future workload change can't misread old stamps)."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import calib_state as bench_calib
-    from check_scale_claims import calib_state as smoke_calib
-
-    mode, txt = bench_calib({})
-    assert mode is None and "no calib stamp" in txt
-    # band-less stamp (the r14 matmul form never shipped in a bench
-    # artifact, but the reader must not invent a band for one)
-    assert bench_calib({"calib_ms": 1800.0})[0] is None
-    ok = {"calib_ms": 150.0, "calib_ms_end": 160.0, "calib_band_ms": 230.0}
-    mode, txt = bench_calib(ok)
-    assert mode is False and "idle-band machine" in txt
-    # either bracket stamp above the band marks the window degraded
-    assert bench_calib({**ok, "calib_ms": 900.0})[0] is True
-    assert bench_calib({**ok, "calib_ms_end": 900.0})[0] is True
-    # no end stamp: judged on start alone, said out loud
-    mode, txt = bench_calib({"calib_ms": 150.0, "calib_band_ms": 230.0})
-    assert mode is False and "no end stamp" in txt
-
-    # the smoke-side reader consumes the block shape (meta + meta_end
-    # lines) with the identical three-way contract
-    blk = lambda meta, end=None: {"meta": meta, "meta_end": end}  # noqa: E731
-    assert smoke_calib(blk(None))[0] is None
-    assert smoke_calib(blk({"load_1m_start": 0.1}))[0] is None
-    assert (
-        smoke_calib(blk({"calib_ms": 1800.0}))[0] is None
-    )  # r14 matmul form: band-less stamp stays unknown
-    assert (
-        smoke_calib(blk({"calib_ms": 150.0, "calib_band_ms": 230.0}))[0]
-        is False
-    )
-    assert (
-        smoke_calib(
-            blk(
-                {"calib_ms": 150.0, "calib_band_ms": 230.0},
-                {"calib_ms_end": 900.0},
-            )
-        )[0]
-        is True
-    )
-
-
-def test_scale_claims_auto_attribute_r14_slow_block():
-    """r14 verdict item 2's done-bar, run against the REAL r14
-    slow-smoke block committed in SCALE.md (minhash_pairs 83.1 s at x8,
-    leg load 12.3): as committed it predates the calib stamp, so the
-    checker says machine mode is UNKNOWN and the outliers stand
-    un-attributed (that block cost three manual dismissal runs); the
-    same block bearing r15 calib stamps outside the idle band gets its
-    outliers auto-attributed to the machine window mechanically."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_scale_claims import derive, parse_blocks
-
-    with open(os.path.join(REPO, "SCALE.md")) as f:
-        blocks = parse_blocks(f.read())
-    slow = [
-        b
-        for b in blocks
-        if b["tag"] == "r14"
-        and b["ops"].get("minhash_pairs", {}).get("sf0.1x8", {}).get("sec", 0)
-        > 50
-    ]
-    assert len(slow) == 1, "the r14 slow block of record should be unique"
-    block = slow[0]
-
-    # as committed: pre-calib block -> unknown, outliers un-attributed
-    lines, outliers = derive(block)
-    joined = "\n".join(lines)
-    assert outliers == 2
-    assert "machine mode unknown" in joined
-    assert "auto-attributed" not in joined
-
-    # the identical data under r15 degraded-window stamps: the two
-    # outliers carry the attribution and the summary names the window
-    stamped = {
-        **block,
-        "meta": {
-            **(block["meta"] or {}),
-            "calib_ms": 151.0,
-            "calib_band_ms": 230.0,
-        },
-        "meta_end": {"meta": "scale_smoke_end", "calib_ms_end": 2100.0},
-    }
-    lines, outliers = derive(stamped)
-    joined = "\n".join(lines)
-    assert outliers == 2
-    assert "DEGRADED machine window" in joined
-    assert joined.count("auto-attributed to machine mode") == 2
-    assert "MACHINE-MODE WINDOW: the 2 timing outlier(s)" in joined
-
-    # a planner-flag inversion in the same degraded window is a
-    # BEHAVIOR outlier: counted, but explicitly excluded from the
-    # machine-mode attribution (r15 review — a flag cannot move with
-    # CPU speed, so the degraded-window dismissal must not cover it)
-    inverted = {
-        **stamped,
-        "ops": {
-            **stamped["ops"],
-            "custkey_join_shuffle_skew": {
-                "sf0.1x8": {
-                    "rows_in": 1200000,
-                    "sec": 0.5,
-                    "sec_per_mrow": 0.417,
-                    "skew_split_engaged": True,  # engaged at the UNIFORM point
-                },
-                "sf0.1x8skew": {
-                    "rows_in": 1200000,
-                    "sec": 0.55,
-                    "sec_per_mrow": 0.458,
-                    "skew_split_engaged": False,
-                },
-            },
-        },
-    }
-    lines, outliers = derive(inverted)
-    joined = "\n".join(lines)
-    assert outliers == 3  # 2 timing + 1 behavior
-    assert "MACHINE-MODE WINDOW: the 2 timing outlier(s)" in joined
-    assert "UNEXPECTED" in joined
-    assert "NOT covered by the machine-mode attribution" in joined
-
-    # in-band stamps: no attribution, the window is called idle-band
-    calm = {
-        **block,
-        "meta": {
-            **(block["meta"] or {}),
-            "calib_ms": 151.0,
-            "calib_band_ms": 230.0,
-        },
-        "meta_end": {"meta": "scale_smoke_end", "calib_ms_end": 160.0},
-    }
-    lines, _ = derive(calm)
-    joined = "\n".join(lines)
-    assert "idle-band machine" in joined
-    assert "auto-attributed" not in joined
-
-
-def test_pins_cross_round_calib_caveat(tmp_path, capsys):
-    """check_bench_pins: a current artifact whose calib stamps record a
-    degraded window prints the CAVEAT and suffixes escalating rows
-    (code/setup-code) with the machine-mode auto-attribution; noise
-    rows and in-band artifacts are untouched."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_bench_pins import print_cross_round
-
-    prev = {
-        "queries": {"flat": 1.0, "moved": 1.0},
-        "comparable": True,
-        "calib_ms": 150.0,
-        "calib_band_ms": 230.0,
-    }
-    curr_degraded = {
-        "queries": {"flat": 1.02, "moved": 1.9},
-        "comparable": True,
-        "calib_ms": 150.0,
-        "calib_ms_end": 1200.0,
-        "calib_band_ms": 230.0,
-    }
-    pp = tmp_path / "BENCH_prev.json"
-    cp = tmp_path / "BENCH_curr.json"
-    pp.write_text(json.dumps(prev))
-    cp.write_text(json.dumps(curr_degraded))
-    print_cross_round(str(pp), prev, curr_degraded, curr_path=str(cp))
-    out = capsys.readouterr().out
-    assert "CAVEAT: curr artifact taken in a degraded machine window" in out
-    moved_line = [ln for ln in out.splitlines() if ln.strip().startswith("moved")][0]
-    assert "code" in moved_line
-    assert "auto-attributed to machine mode" in moved_line
-    flat_line = [ln for ln in out.splitlines() if ln.strip().startswith("flat")][0]
-    assert "auto-attributed" not in flat_line
-
-    curr_ok = {**curr_degraded, "calib_ms_end": 160.0}
-    cp.write_text(json.dumps(curr_ok))
-    print_cross_round(str(pp), prev, curr_ok, curr_path=str(cp))
-    out = capsys.readouterr().out
-    assert "CAVEAT" not in out
-    assert "auto-attributed" not in out
-
-
-def test_derive_x64_bound_claims():
-    """r14 verdict item 8: the x64 stateful-leg block is a repeatable
-    gauntlet-optional stage whose design-bound claims are DERIVED from
-    the stamped numbers (never read off the script's own boolean) —
-    held bounds become claims, violated ones become outliers.  Unlike
-    derive()'s timing outliers, these are COUNT-based invariants a slow
-    machine cannot inflate, so a degraded calib window must NOT
-    auto-attribute them to machine mode (r15 review: the first cut did,
-    which would have filed a real bound violation as machine noise)."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_scale_claims import derive_x64, parse_blocks
-
-    def block_text(peak, sliced_max, implied, calib_end=160.0):
-        lines = [
-            {"meta": "scale_x64", "copies": 64, "load_1m_start": 0.2,
-             "comparable": True, "calib_ms": 150.0, "calib_band_ms": 230.0},
-            {"op": "session_30m_x64skew", "rows_in": 6400000, "sec": 3.3,
-             "per_task_rows": {"groups": 96000, "p50": 40, "p99": 56,
-                               "max": 2560035}},
-            {"op": "session_30m_sliced_x64skew", "rows_in": 6400000,
-             "sec": 4.8, "per_task_rows": {"groups": 2393764, "p50": 1,
-                                           "p99": 16, "max": sliced_max}},
-            {"op": "rollup_maintain_x64", "rows_in": 6400000, "sec": 80.5,
-             "peak_state_rows": peak, "state_bound_rows": 61455,
-             "bound_held": True},
-            {"op": "minhash_pairs_x64", "rows_in": 320000, "sec": 25.0,
-             "verified_pairs": 16305,
-             "bucket_docs": {"max": 17, "p999": 3,
-                             "candidate_pairs_implied": implied}},
-            {"meta": "scale_x64_end", "calib_ms_end": calib_end},
-        ]
-        return (
-            "### Gauntlet run rT-x64 (2026-08-16T00:00:00Z, head abc1234; "
-            "scale_x64 calm-gated at load 0.2, post-run load at append "
-            "3.0)\n\n```json\n"
-            + "\n".join(json.dumps(ln) for ln in lines)
-            + "\n```\n"
-        )
-
-    # all bounds held (the real r14 re-run numbers): three claims,
-    # zero outliers, new header generation parses
-    blocks = parse_blocks(block_text(61414, 23040, 113934))
-    assert len(blocks) == 1 and blocks[0]["gate_load"] == "0.2"
-    lines, outliers = derive_x64(blocks[0])
-    joined = "\n".join(lines)
-    assert outliers == 0
-    assert "rollup state bound" in joined and "HELD" in joined
-    assert "occupancy 99.9%" in joined
-    assert "session slicing bounds per-task state at x64skew" in joined
-    assert "111x tighter" in joined
-    assert "LSH candidate space bounded" in joined
-    assert "idle-band machine" in joined
-
-    # every bound violated: three outliers, each re-derived (the
-    # stamped bound_held:true lie is ignored — peak > bound decides)
-    exploded = 320000 * 319999 // 2 // 50
-    blocks = parse_blocks(block_text(70000, 3000000, exploded))
-    lines, outliers = derive_x64(blocks[0])
-    joined = "\n".join(lines)
-    assert outliers == 3
-    assert "OUTLIER (state bound)" in joined and "VIOLATED" in joined
-    assert "OUTLIER (slicing ineffective at x64skew)" in joined
-    assert "OUTLIER (candidate explosion)" in joined
-    assert "auto-attributed" not in joined  # calib in band: real findings
-
-    # same violations in a stamped degraded window: still real findings
-    # (counts don't move with CPU speed) — each carries the explicit
-    # do-NOT-dismiss suffix instead of the machine-mode attribution
-    lines, outliers = derive_x64(
-        parse_blocks(block_text(70000, 3000000, exploded, calib_end=2100.0))[0]
-    )
-    joined = "\n".join(lines)
-    assert outliers == 3
-    assert "auto-attributed to machine mode" not in joined
-    assert joined.count("count-based invariant") == 3
-    assert "treat as code/data" in joined
+    # an artifact at another scale factor fails: its times mean nothing
+    # against the pinned sf's bars
+    assert check(str(base), art("BENCH_r06.json", {"q1": 0.1, "q2": 0.1}, sf=0.01)) == 1

@@ -108,14 +108,17 @@ def test_estimate_accuracy_200_groups_one_pass(spark):
 
 
 def test_small_cardinalities_exact(spark):
-    """Linear counting is exact-up-to-bucket-collisions for tiny sets
+    """Linear counting is exact-up-to-register-collisions for tiny sets
     — the serving table's most common case (small per-window groups).
-    With 4096 buckets a collision first appears around n~=64
-    (birthday bound); below that the count is exact."""
+    Keys 0..63 happen to land in distinct registers; any two keys that
+    share a register count once, whatever the group size: 2397 and
+    4869 share register 323, so that pair estimates 1 (-50%)."""
     for n in (1, 2, 5, 17, 64):
         df = spark.range(n).select(F.col("id").alias("u"))
         est = _sketch(df).first()["est"]
         assert abs(est - n) <= (1 if n >= 64 else 0), (n, est)
+    pair = spark.createDataFrame([(2397,), (4869,)], "u long")
+    assert _sketch(pair).first()["est"] == 1
 
 
 def test_merge_raises_on_null_sketch(spark):

@@ -8,17 +8,21 @@ TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ). A
 UTC-adjusted MICROS file (plain TimestampType) is the third plausible
 drift. All three must normalize to the same (ts: timestamp, ts_ns:
 bigint) shape with identical values.
+
+Also here: get_spark's driver-heap default, which must fit the machine.
 """
 
 from __future__ import annotations
 
 import datetime
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from video_stream_processor_spark.io import _normalize_events
+from video_stream_processor_spark.session import default_driver_memory
 
 # Naive-UTC wall clocks; epoch micros are tz-independent for these.
 _WALL = [
@@ -100,3 +104,23 @@ def test_events_stream_reads_every_encoding(spark, tmp_path, ts_type):
     )
     assert [r["ts_ns"] for r in rows] == _EXPECT_NS
     assert [r["ts"].replace(tzinfo=None) for r in rows] == _WALL
+
+
+def test_default_driver_memory_fits_the_machine(monkeypatch):
+    """get_spark's heap default is a quarter of physical RAM, capped at
+    32g, so it never exceeds the machine; VSP_DRIVER_MEMORY wins."""
+    monkeypatch.delenv("VSP_DRIVER_MEMORY", raising=False)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mem = default_driver_memory()
+    assert mem.endswith("m") and 1 <= int(mem[:-1]) <= ram_mb // 4
+
+    def box(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return default_driver_memory()
+
+    assert box(15) == "3840m"
+    assert box(256) == "32768m"
+
+    monkeypatch.setenv("VSP_DRIVER_MEMORY", "3g")
+    assert box(256) == "3g"

@@ -1687,11 +1687,15 @@ def test_pq_encode_mapside_equals_longform_and_never_shuffles(emb):
 def test_train_memo_reuses_and_invalidates(emb):
     """Trained artifacts (k-means cells, PQ codebooks) memoize per
     (input plan, params): repeated builder calls in a resident session
-    must not re-train; changed params or invalidation must."""
+    must not re-train; changed params or invalidation must. The
+    embedding dim hint is memoized per input too, and invalidation
+    drops it with the rest."""
     from video_stream_processor_spark.llm.dedup import (
         invalidate_checkpoint_memo,
     )
     from video_stream_processor_spark.llm.similarity import (
+        _DIM_HINT_MEMO,
+        embedding_dim_hint,
         kmeans_centroids,
         pq_train,
     )
@@ -1702,8 +1706,11 @@ def test_train_memo_reuses_and_invalidates(emb):
     b = pq_train(emb, m=8, k=16, iters=2)
     assert pq_train(emb, m=8, k=16, iters=2) is b
     assert pq_train(emb, m=4, k=16, iters=2) is not b
+    embedding_dim_hint(emb)
+    assert _DIM_HINT_MEMO
     invalidate_checkpoint_memo()
     assert kmeans_centroids(emb, k=8, iters=2) is not a
+    assert not _DIM_HINT_MEMO
 
 
 def test_ivf_assign_mapside_equals_groupby_form(emb):

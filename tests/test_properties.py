@@ -11,29 +11,21 @@ extended with the generative tooling this environment ships:
 * HLL sketch (A5): the register array must be a pure function of the
   key SET (the invariant every rollup tier-derivation rests on), and
   the engine's merge aggregate must equal elementwise-max computed in
-  plain Python;
-* bench classifier: total function over arbitrary artifact pairs, and
-  the identity pair classifies everything noise (no self-flagging);
-* scale-claims parser: round-trips the exact block format gauntlet.sh
-  appends to SCALE.md.
+  plain Python.
 
 Spark-backed properties cap ``max_examples`` (a Spark job per example)
 and set ``derandomize=True``: a suite run is reproducible evidence,
-not a coin flip. Pure-Python properties afford more examples.
+not a coin flip.
 
 ``VSP_HYPOTHESIS_SCALE`` multiplies every budget (r13 verdict item 8):
-the CI default of 1 keeps suite latency, while the gauntlet exports a
-higher scale — these oracles are cheap relative to the suite's wall
-band, so the evidence runs buy deeper example coverage. Derandomize
-stays on at every scale: a bigger budget widens the deterministic
-prefix, it never re-rolls it.
+the CI default of 1 keeps suite latency, while a higher scale buys
+deeper example coverage. Derandomize stays on at every scale: a bigger
+budget widens the deterministic prefix, it never re-rolls it.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import sys
 
 
 def _ex(n: int) -> int:
@@ -47,11 +39,6 @@ hypothesis = pytest.importorskip("hypothesis")
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
-
-REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCRIPTS_DIR = os.path.join(REPO_DIR, "scripts")
-if SCRIPTS_DIR not in sys.path:
-    sys.path.insert(0, SCRIPTS_DIR)
 
 from video_stream_processor_spark.operators import hll  # noqa: E402
 from video_stream_processor_spark.operators.asof import (  # noqa: E402
@@ -254,142 +241,6 @@ def test_hll_estimate_accuracy_at_larger_n(spark):
             .collect()[0]["est"]
         )
         assert abs(est - 200) <= 20, f"p={p}: est {est} off by >10% at n=200"
-
-
-# --------------------------------------------- bench classifier totality
-
-import check_bench_pins as cbp  # noqa: E402
-
-QNAMES = st.sampled_from(["q1", "q2", "q3", "lifecycle_leg"])
-SECS = st.floats(min_value=0.0, max_value=50.0, allow_nan=False).map(
-    lambda x: round(x, 3)
-)
-
-
-@st.composite
-def artifact(draw):
-    qs = draw(st.dictionaries(QNAMES, SECS, max_size=4))
-    art = {"queries": qs}
-    if draw(st.booleans()):
-        spread = {}
-        for n in qs:
-            trip = sorted(draw(st.tuples(SECS, SECS, SECS)))
-            spread[n] = {"min": trip[0], "med": trip[1], "max": trip[2]}
-        art["spread"] = spread
-    # commit_io_s, phases, and each phase dict's keys are drawn
-    # INDEPENDENTLY (r13 advisor: the old strategy only generated
-    # phases when commit_io_s was present and always with both setup
-    # and maintain keys, so the classifier's guarded partial-phase
-    # paths — phases without commit_io_s, setup-less or maintain-less
-    # blocks — were never exercised and the totality claim was
-    # narrower than stated)
-    if draw(st.booleans()):
-        art["commit_io_s"] = {n: draw(SECS) for n in qs}
-    if draw(st.booleans()):
-        art["phases"] = {
-            n: {
-                k: draw(SECS)
-                for k in draw(
-                    st.sets(
-                        st.sampled_from(
-                            ["setup", "maintain", "compact", "serve"]
-                        )
-                    )
-                )
-            }
-            for n in qs
-        }
-    return art
-
-
-@settings(max_examples=_ex(150), deadline=None, derandomize=True)
-@given(prev=artifact(), curr=artifact())
-def test_classifier_total_over_arbitrary_artifacts(prev, curr):
-    """classify_cross_round is a TOTAL function of two artifacts: never
-    raises, classifies every shared query exactly once, and only into
-    the documented classes."""
-    rows, summary = cbp.classify_cross_round(prev, curr)
-    shared = set(prev["queries"]) & set(curr["queries"])
-    assert len(rows) == len(shared)
-    assert sum(summary["counts"].values()) == len(rows)
-    assert {r[4] for r in rows} <= {
-        "noise",
-        "fsync-regime",
-        "setup",
-        "setup-code",
-        "code",
-    }
-    assert set(summary["added"]) == set(curr["queries"]) - set(
-        prev["queries"]
-    )
-    assert set(summary["dropped"]) == set(prev["queries"]) - set(
-        curr["queries"]
-    )
-
-
-@settings(max_examples=_ex(150), deadline=None, derandomize=True)
-@given(art=artifact())
-def test_classifier_identity_is_all_noise(art):
-    """An artifact compared against byte-identical bytes must classify
-    every query noise — a classifier that can flag `code` on the
-    identity pair would be reading machine state, not evidence. The
-    two sides are independent deep copies (r13 advisor: passing the
-    same dict object twice would let an input-mutating classifier mask
-    the aliased comparison this test means to pin)."""
-    import copy
-
-    rows, summary = cbp.classify_cross_round(art, copy.deepcopy(art))
-    assert summary["counts"]["code"] == 0
-    assert summary["counts"]["fsync-regime"] == 0
-    assert summary["counts"]["setup"] == 0
-    assert summary["counts"]["setup-code"] == 0
-    assert all(r[4] == "noise" for r in rows)
-
-
-# ------------------------------------------- scale-claims block parser
-
-import check_scale_claims as csc  # noqa: E402
-
-OPNAME = st.sampled_from(["scan", "join_x", "quality_score"])
-POINT = st.fixed_dictionaries(
-    {
-        "rows_in": st.integers(min_value=1, max_value=10**8),
-        "sec": SECS,
-        "sec_per_mrow": SECS,
-    }
-)
-CURVE = st.dictionaries(
-    st.sampled_from(["sf0.01", "sf0.1", "sf0.1x8", "sf0.1x8skew"]),
-    POINT,
-    min_size=1,
-    max_size=4,
-)
-
-
-@settings(max_examples=_ex(100), deadline=None, derandomize=True)
-@given(ops=st.dictionaries(OPNAME, CURVE, min_size=1, max_size=3))
-def test_scale_claims_parser_roundtrips_gauntlet_block(ops):
-    """parse_blocks recovers exactly the curves from a block formatted
-    the way gauntlet.sh appends them to SCALE.md, and derive() is total
-    over them (outliers are findings, never crashes)."""
-    lines = [
-        "### Gauntlet run rTT (2026-08-16T00:00:00Z, head abc1234, "
-        "load at start 0.10)",
-        "",
-        "```json",
-        json.dumps(
-            {"meta": "scale_smoke", "load_1m_start": 0.1, "comparable": True}
-        ),
-    ]
-    for op, curve in ops.items():
-        lines.append(json.dumps({"op": op, "curve": curve}))
-    lines.append("```")
-    blocks = csc.parse_blocks("\n".join(lines))
-    assert len(blocks) == 1
-    assert blocks[0]["ops"] == ops
-    assert blocks[0]["meta"]["comparable"] is True
-    report, outliers = csc.derive(blocks[0])
-    assert outliers >= 0 and report  # total, and always says something
 
 
 # --------------------------------------------- MinHash LSH exact dups

@@ -56,16 +56,17 @@ _MEMO_HITS: dict[str, int] = {}
 
 
 def invalidate_checkpoint_memo() -> None:
-    """Drop every memoized checkpoint AND trained artifact (e.g. after
-    regenerating the parquet fixtures mid-session). Evicted frames are
-    reclaimed by the driver's ContextCleaner once callers release
-    their references."""
+    """Drop every memoized checkpoint, trained artifact AND embedding
+    dim hint (e.g. after regenerating the parquet fixtures
+    mid-session). Evicted frames are reclaimed by the driver's
+    ContextCleaner once callers release their references."""
     with _CKPT_LOCK:
         _CKPT_MEMO.clear()
-    from .similarity import _TRAIN_LOCK, _TRAIN_MEMO
+    from .similarity import _DIM_HINT_MEMO, _TRAIN_LOCK, _TRAIN_MEMO
 
     with _TRAIN_LOCK:
         _TRAIN_MEMO.clear()
+        _DIM_HINT_MEMO.clear()
 
 
 def _input_fingerprint(df: DataFrame) -> tuple:
@@ -514,8 +515,7 @@ def minhash_bucket_sizes(
     C(n,2) candidate structs in the pair stage). The 100 TB design
     claim "bucket sizes are small by LSH construction" is a
     distributional statement; this probe makes it measurable on any
-    corpus (scripts/scale_x64.py stamps max + percentiles at the x64
-    point)."""
+    corpus."""
     rows = k // bands
     arr = _memo_checkpoint(_doc_shingle_arrays(docs), "minhash_arr")
     sig_fn = minhash_signatures_oph if one_perm else minhash_signatures

@@ -34,18 +34,17 @@ def _dvec(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-#: Plan-time dimension HINT for the unrolled dot-product fast path
-#: (r15 optimization, guide §1.2 step 2): higher-order functions are
-#: CodegenFallback, so the zip_with+aggregate fold runs interpreted —
-#: ~0.5 ms per 64-dim evaluation, which dominates every pair-verify
-#: and scoring path (llm_srp_pairs spent ~10 s of its 22 s in verify
-#: cosines at sf0.1). Vectors of exactly this length instead take a
-#: flat left-associated arithmetic chain that whole-stage codegen
-#: compiles; ANY other length falls back to the generic fold. Both
-#: forms compute the same left-to-right double sum, so results are
-#: bit-identical either way — the hint only selects the execution
-#: strategy, never the value.
-VEC_DIM_HINT = 64
+# Plan-time dimension HINT for the unrolled dot-product fast path
+# (r15 optimization, guide §1.2 step 2): higher-order functions are
+# CodegenFallback, so the zip_with+aggregate fold runs interpreted —
+# ~0.5 ms per 64-dim evaluation, which dominates every pair-verify
+# and scoring path (llm_srp_pairs spent ~10 s of its 22 s in verify
+# cosines at sf0.1). Vectors of exactly the hinted length
+# (`embedding_dim_hint`) instead take a flat left-associated
+# arithmetic chain that whole-stage codegen compiles; ANY other length
+# falls back to the generic fold. Both forms compute the same
+# left-to-right double sum, so results are bit-identical either way —
+# the hint only selects the execution strategy, never the value.
 
 #: Unroll ceiling for a RESOLVED dim hint: a d-dim cosine inlines ~3d
 #: product terms (plus guards) into one expression — fine at 64,
@@ -61,16 +60,16 @@ _DIM_HINT_MEMO: dict[tuple, int | None] = {}
 
 def embedding_dim_hint(embeddings: DataFrame) -> int | None:
     """Resolve the codegen fast-path dimension hint FROM THE TABLE
-    (r15 verdict item 8 — the hard-coded ``VEC_DIM_HINT=64`` silently
-    lost the fast path on any other corpus dim): the length of the
+    (r15 verdict item 8 — a hard-coded 64 silently lost the fast path
+    on any other corpus dim): the length of the
     first non-null embedding, memoized per (session, plan, files).
 
     Correctness never depends on the returned value — every consumer
     guards with ``size(v) == dim`` and falls back to the generic fold
     per row — so a mixed-dim corpus simply takes the fast path on the
     rows that match the probed dim. Returns None (fold everywhere)
-    when the probe fails, the table is empty, or the dim exceeds
-    ``MAX_UNROLL_DIM``."""
+    when the memo key or the probe fails, the table is empty, or the
+    dim exceeds ``MAX_UNROLL_DIM``."""
     try:
         key = (
             id(embeddings.sparkSession),
@@ -78,7 +77,7 @@ def embedding_dim_hint(embeddings: DataFrame) -> int | None:
             _dedup_fingerprint(embeddings),
         )
     except Exception:
-        return VEC_DIM_HINT
+        return None
     with _TRAIN_LOCK:
         if key in _DIM_HINT_MEMO:
             return _DIM_HINT_MEMO[key]

@@ -22,8 +22,17 @@ Max is commutative, associative, and idempotent, so the register array
 is a pure function of the SET of keys — byte-identical regardless of
 partitioning, micro-batch boundaries, merge tree shape, or repeated
 merges. Estimates are then a deterministic function of the registers
-(raw HLL with linear counting for the small range — no bias tables;
-the +-10%-of-exact serving bound is held with >5 sigma at p=12).
+(raw HLL with linear counting for the small range — no bias tables).
+
+Small-range bound: linear counting counts OCCUPIED registers, so keys
+that share a register count once. A group of n keys comes out short
+by one per shared register, and one shared register already costs
+1/n: a group of fewer than 10 keys misses the +-10% serving bound
+whenever two of its keys collide, which at p=12 happens with
+probability ~n(n-1)/2m (0.7% at n=8; e.g. bigint keys 2397 and 4869
+share register 323). Groups of 10-19 keys need two collisions to miss
+(<0.1%), and from ~30 keys up a miss is under 1e-5. Exact counting of
+small groups would close this, at the cost of a rollup format change.
 
 Scale shape: the sketch build is a two-phase aggregation —
 ``groupBy(*keys, bucket)`` max-rho partials, then ``groupBy(*keys)``
@@ -224,8 +233,9 @@ def estimate_col(regs: Column | str, p: int = DEFAULT_P) -> Column:
     p=12: raw peaks at +15% low / +5.5% mid, LC at +14% past 5m), so
     the min dominates either alone and needs no empirical bias tables;
     worst measured error across the 0-500k sweep is +5.5% (n ~= 6m),
-    <=1% outside the transition — the +-10% serving bound holds with
-    ~2x margin everywhere.
+    <=1% outside the transition. The exception is the smallest groups
+    (module docstring): under 10 keys, one shared register is more
+    than 10% of the count.
 
     Raises on a size-mismatched register array (wrong ``p``): the
     estimator's alpha/m constants are precision-specific, so a silent

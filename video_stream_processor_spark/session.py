@@ -126,6 +126,26 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Ceiling on the default driver heap, in MiB.
+_DRIVER_MEMORY_CAP_MB = 32 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for `get_spark`: ``VSP_DRIVER_MEMORY`` when
+    set, else a quarter of physical RAM capped at 32g. The heap shares
+    the machine with the Python workers and the page cache; a fixed 32g
+    exceeds the RAM of a small machine, whose kernel then kills the JVM
+    once the heap grows past it."""
+    override = os.environ.get("VSP_DRIVER_MEMORY")
+    if override:
+        return override
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return "4g"  # no sysconf (non-POSIX): a heap any test box holds
+    return f"{max(1, min(_DRIVER_MEMORY_CAP_MB, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "video-stream-processor-spark",
     cpus: int | None = None,
@@ -141,7 +161,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("VSP_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
         # Local right-sizing: the test-SF parquet files are ≤ ~15 MB, so

@@ -89,8 +89,10 @@ def rollup_stats(
     (element-wise max merge: commutative, associative, idempotent), so
     live, backfilled, and derived rows are byte-identical by
     construction, and ``n_users_approx`` is derived FROM the persisted
-    registers (deterministic estimate, measured <=±5.5% worst-case,
-    well inside the ±10% serving bound).
+    registers (deterministic estimate, measured <=±5.5% worst-case
+    from a few dozen users up; a window group of fewer than 10 users
+    misses the ±10% serving bound when two of its users share a
+    register — see `operators.hll`).
 
     ``sum_value`` aggregates EXACT integer cents for the same reason:
     double summation is order-dependent; integer cents sum identically
@@ -648,11 +650,10 @@ def cached_open_groups(
 
 
 #: Wall floor for the derived store count (r12 verdict item 1, settled
-#: with data in round 13): the store-count sweep at fixed bench data
-#: (`scripts/rollup_sizing_sweep.py`, SCALE.md r13 table) measured a
-#: U-shaped wall — 4 stores cost +29% wall over the 6-8 plateau
-#: (maintain 11.4 s vs 9.0 s) while saving under 2 s of commit I/O,
-#: because below the plateau the per-trigger drain loses task
+#: with data in round 13): a store-count sweep at fixed bench data
+#: measured a U-shaped wall — 4 stores cost +29% wall over the 6-8
+#: plateau (maintain 11.4 s vs 9.0 s) while saving under 2 s of commit
+#: I/O, because below the plateau the per-trigger drain loses task
 #: parallelism faster than thin-store fsyncs get cheaper. Above the
 #: plateau the fsync axis takes over (12 stores: +12% wall at 2.8x the
 #: commit I/O; 16: +24% at 6.5x). The occupancy estimate's job is the
@@ -660,22 +661,12 @@ def cached_open_groups(
 #: this floor guards the LOW side for thin-estimate workloads. A
 #: measured machine-class default, overridable per call.
 #:
-#: Provenance (r13 verdict item 5 — WHICH machine the 6 belongs to):
-#: the sweep behind it ran on a 32-CPU local-disk box at 1-min load
+#: Provenance: the sweep ran on a 32-CPU local-disk box at 1-min load
 #: 0.32, 2026-08-16, med-of-3 per point (SCALE.md "r13 store-count
-#: sizing sweep" raw block; regenerate with
-#: ``python scripts/rollup_sizing_sweep.py``). The sweep script
-#: refuses to compare against that block on a box whose
-#: ``os.cpu_count()`` differs from the stamped 32 — the low-side
-#: parallelism-loss knee moves with core count, so a different
+#: sizing sweep" raw block, in git history at commit ab08286). The
+#: low-side parallelism-loss knee moves with core count, so a different
 #: machine class re-measures before trusting this floor.
 MIN_DERIVED_STATE_STORES = 6
-
-#: CPU count of the box `MIN_DERIVED_STATE_STORES`'s sweep was
-#: measured on — `scripts/rollup_sizing_sweep.py` warns (and SCALE.md
-#: readers check) when the current box differs, which is the
-#: re-validation trigger for the floor.
-SIZING_SWEEP_CPUS = 32
 
 
 def derived_state_partitions(
