@@ -83,7 +83,7 @@ SUPPLEMENTAL: dict[str, list[str]] = {
     "U4": ["operators/asof.asof_join_cogrouped (groupBy().cogroup().applyInPandas)"],
     "P4": ["io.read_links (trim + '#'-comment filter)", "tests/test_station.py::test_links_source_filters"],
     "A1": ["pipeline/sink.write_json_array post-write count", "every oracle query's row-count gate"],
-    "O2": ["functions/scalar.file_extension (element_at(arr,-1))", "tests/test_functions.py property suite"],
+    "O2": ["functions/scalar.file_extension (substring_index(path, '.', -1))", "tests/test_functions.py property suite"],
     "A2": ["pipeline/station.build_station_records observe()", "tests/test_station.py"],
     "A5": [
         "operators/hll.py deterministic register-max HLL, mergeable + "

@@ -1,4 +1,4 @@
-"""Property tests: scalar Column expressions vs the Python behavioral
+"""Property tests: scalar SQL expressions vs the Python behavioral
 spec (SURVEY §5.2) over a seeded corpus of adversarial titles and URLs.
 
 One Spark job evaluates the whole corpus (per-example round-trips would
@@ -13,6 +13,7 @@ import random
 from pyspark.sql import functions as F
 
 from video_stream_processor_spark.functions import pyref, scalar
+from video_stream_processor_spark.session import ensure_runtime_confs
 
 _WORDS = [
     "the", "and", "official", "video", "hd", "tamil", "song", "new",
@@ -70,14 +71,14 @@ def test_scalar_parity_corpus(spark):
         r["id"]: r
         for r in df.select(
             "id",
-            scalar.is_hls("url").alias("hls"),
-            scalar.file_extension("url").alias("ext"),
-            scalar.codec("url").alias("codec"),
-            scalar.bitrate("url").alias("bitrate"),
-            scalar.title_tags("title").alias("tags"),
-            scalar.language("title").alias("language"),
-            scalar.language_code("title").alias("langcode"),
-            scalar.safe_filename("title", "url").alias("fname"),
+            F.expr(scalar.is_hls("url")).alias("hls"),
+            F.expr(scalar.file_extension("url")).alias("ext"),
+            F.expr(scalar.codec("url")).alias("codec"),
+            F.expr(scalar.bitrate("url")).alias("bitrate"),
+            F.expr(scalar.title_tags("title")).alias("tags"),
+            F.expr(scalar.language("title")).alias("language"),
+            F.expr(scalar.language_code("title")).alias("langcode"),
+            F.expr(scalar.safe_filename("title", "url")).alias("fname"),
         ).collect()
     }
     bad = []
@@ -99,6 +100,24 @@ def test_scalar_parity_corpus(spark):
     assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
 
 
+def test_scalar_sql_parses_under_hostile_escape_mode(spark):
+    """The derivations are SQL text whose regexes are raw literals, which
+    parse as written only with spark.sql.parser.escapedStringLiterals off;
+    ensure_runtime_confs resets a session that turned it on."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    title, url = "Été straße - it's a semi-final!! Tamil HD", "https://h/a.b/c.MP3?x=1"
+    spark.conf.set(key, "true")
+    try:
+        ensure_runtime_confs(spark)
+        got = spark.createDataFrame([(title, url)], ["title", "url"]).select(
+            F.expr(scalar.title_tags("title")),
+            F.expr(scalar.safe_filename("title", "url")),
+        ).first()
+    finally:
+        spark.conf.set(key, "false")
+    assert tuple(got) == (pyref.title_tags(title), pyref.safe_filename(title, url))
+
+
 def test_dual_timestamp_parity(spark):
     stamps = [
         dt.datetime(2026, 8, 13, 4, 5, 6, tzinfo=dt.timezone.utc),
@@ -106,7 +125,7 @@ def test_dual_timestamp_parity(spark):
         dt.datetime(2000, 1, 1, 0, 0, 0, 1, tzinfo=dt.timezone.utc),
     ]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(stamps)], ["id", "ts"])
-    plain, iso = scalar.dual_timestamp("ts")
+    plain, iso = map(F.expr, scalar.dual_timestamp("ts"))
     got = {r["id"]: r for r in df.select("id", plain.alias("p"), iso.alias("i")).collect()}
     for i, s in enumerate(stamps):
         ep, ei = pyref.dual_timestamp(s)
@@ -116,7 +135,7 @@ def test_dual_timestamp_parity(spark):
 
 def test_deterministic_uuid_shape(spark):
     df = spark.range(3).select(
-        scalar.deterministic_uuid(F.col("id").cast("string"), "station").alias("u")
+        F.expr(scalar.deterministic_uuid("CAST(id AS STRING)", "station")).alias("u")
     )
     vals = [r["u"] for r in df.collect()]
     assert len(set(vals)) == 3
@@ -134,6 +153,6 @@ def test_error_classification(spark):
         ("socket timeout", "retryable"),
     ]
     df = spark.createDataFrame(cases, ["err", "expect"])
-    out = df.select("expect", scalar.classify_extract_error("err").alias("got")).collect()
+    out = df.select("expect", F.expr(scalar.classify_extract_error("err")).alias("got")).collect()
     for r in out:
         assert r["got"] == r["expect"], r

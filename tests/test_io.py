@@ -9,18 +9,21 @@ UTC-adjusted MICROS file (plain TimestampType) is the third plausible
 drift. All three must normalize to the same (ts: timestamp, ts_ns:
 bigint) shape with identical values.
 
-Also here: get_spark's driver-heap default, which must fit the machine.
+Also here: get_spark's driver-heap and shuffle-width defaults, which
+must fit the machine.
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from video_stream_processor_spark import session
 from video_stream_processor_spark.io import _normalize_events
 from video_stream_processor_spark.session import default_driver_memory
 
@@ -124,3 +127,39 @@ def test_default_driver_memory_fits_the_machine(monkeypatch):
 
     monkeypatch.setenv("VSP_DRIVER_MEMORY", "3g")
     assert box(256) == "3g"
+
+
+def test_default_shuffle_width_is_local_cores(monkeypatch):
+    """get_spark's shuffle width defaults to the core count, so a
+    shuffle stage runs in one task wave: below 8 cores it is ``cpus``
+    (the rule was ``max(cpus, 8)``), at 8 or more it is unchanged; an
+    explicit width still wins. Read off the builder's confs — one JVM
+    per process, so a real session cannot be rebuilt at each width."""
+    built = {}
+
+    class Builder:
+        def master(self, master):
+            built["master"] = master
+            return self
+
+        def appName(self, _name):
+            return self
+
+        def config(self, key, value):
+            built[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    monkeypatch.setattr(session, "ensure_runtime_confs", lambda spark: spark)
+
+    def width(cpus, **kw):
+        session.get_spark(cpus=cpus, **kw)
+        assert built["master"] == f"local[{cpus}]"
+        return int(built["spark.sql.shuffle.partitions"])
+
+    assert [width(c) for c in (1, 2, 4, 7)] == [1, 2, 4, 7]
+    assert [width(c) for c in (8, 16, 32)] == [max(c, 8) for c in (8, 16, 32)]
+    assert width(4, shuffle_partitions=8) == 8

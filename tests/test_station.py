@@ -9,6 +9,7 @@ import datetime as dt
 import json
 
 import pytest
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import Observation
 
 from video_stream_processor_spark.functions import pyref
@@ -155,3 +156,24 @@ def test_station_pipeline_streaming_twin(spark, links_file, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("SELECT * FROM station_stream").collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
+
+
+def test_station_build_is_few_jvm_calls(spark, links_file, monkeypatch):
+    """The station plan is built from SQL text in one ``selectExpr``, so
+    a call costs a bounded number of py4j round trips (~100 here; the
+    same projection built from Column objects took ~3,000-4,800, one or
+    more per expression node). Counted warm, on the streaming plan with
+    its observation, as a refresh cycle builds it."""
+    links = read_links(spark, links_file, streaming=True)
+    build_station_records(links, StubExtractor, observation="station_rt")  # warm
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    build_station_records(links, StubExtractor, observation="station_rt")
+    monkeypatch.setattr(GatewayClient, "send_command", send)
+    assert 0 < len(calls) < 300, len(calls)

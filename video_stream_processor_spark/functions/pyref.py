@@ -3,7 +3,7 @@
 Re-implemented from the observed semantics of
 ``/root/reference/video_processor.py:182-251`` (cited per function in
 ``scalar.py``); used ONLY by property tests as the ground truth the
-Column expressions must reproduce. Not imported by engine code.
+SQL expressions must reproduce. Not imported by engine code.
 """
 
 from __future__ import annotations

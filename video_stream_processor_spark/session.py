@@ -12,8 +12,13 @@ Config rationale (written for the 100 TB target, exercised on local[N]):
 * **AQE on** (+ partition coalescing + skew-join): at cluster scale this
   right-sizes post-shuffle partitions and splits skewed join partitions
   at runtime — the single highest-leverage knob for ad-hoc analytics.
-* **shuffle.partitions ≈ cores** locally; on a 1000-executor cluster set
-  ~2-3× total cores and let AQE coalesce down per stage.
+* **shuffle.partitions = cores** locally, so every shuffle stage —
+  streaming stages above all, which AQE does not coalesce — runs in
+  one task wave: a width above the core count makes a second wave of
+  the same per-task fixed cost (on 4 cores, 8 partitions ran the
+  station dedup stage as two task waves). On a 1000-executor cluster
+  set ~2-3× total cores and let AQE coalesce down per stage. A
+  streaming checkpoint keeps the width it recorded.
 * **Session timezone pinned UTC** so timestamp rendering matches the
   DuckDB oracle (naive-UTC) and is cluster-node independent.
 * **Arrow enabled** — every Python-boundary crossing (pandas UDFs,
@@ -47,6 +52,9 @@ _RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # parquet footer min/max → MIN/MAX/COUNT answered from metadata
     "spark.sql.parquet.aggregatePushdown": "true",
+    # functions/scalar.py builds derivations as SQL text; its string
+    # literals (r'...' regexes) parse as written only in the default mode
+    "spark.sql.parser.escapedStringLiterals": "false",
 }
 
 
@@ -156,7 +164,7 @@ def get_spark(
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus), 8)
+        shuffle_partitions = int(cpus)  # one task wave; see module docstring
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
