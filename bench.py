@@ -188,33 +188,13 @@ EXTRA_BUILDERS = {
     "rollup_maintain_serve_v2_sized": lambda s, d: _rollup_maintain_serve(
         s, d, state_partitions=8
     ),
-    # r10: the lifecycle at the NEW DEFAULT — state_partitions="auto"
-    # (fresh checkpoint every call, so each pass derives the sizing
-    # like a first start would). The r9 verdict ordered the
-    # volume-derived sizing made the default and its "done" bar is
-    # "new-checkpoint default measurably matches the sized leg": at
-    # this session (32 shuffle partitions, p=12) the derivation lands
-    # on 8 — the same plan as v2_sized — so this leg's number IS that
-    # measurement, in the artifact of record. The pinned v2 leg keeps
-    # explicit None (session conf) for bar comparability.
+    # the lifecycle at the shipped default, state_partitions="auto"
+    # (fresh checkpoint every call, so each pass derives the store
+    # count like a first start would: 8 stores at p=12, capped at the
+    # session width). The pinned v2 leg keeps explicit None (session
+    # conf) for bar comparability.
     "rollup_maintain_serve_v2_auto": lambda s, d: _rollup_maintain_serve(
         s, d, state_partitions="auto"
-    ),
-    # r11: the auto lifecycle with expected_open_groups ESTIMATED from
-    # the staged source itself instead of the static default 8 — the
-    # r10 verdict's item 4 ("derive the sizing's one free parameter
-    # from data"), measured in the artifact of record. Since r14 the
-    # estimate is PERSISTED next to the staged source keyed by a data
-    # fingerprint (cached_open_groups, r13 verdict item 3): the first
-    # warm pass computes and caches it, every later pass — i.e. every
-    # TIMED pass — reads it, which is what ships (a production
-    # maintainer re-estimates only when the landing data changes, not
-    # per start). The setup phase therefore carries the fingerprint
-    # check, not the 0.45-0.68 s occupancy pre-scan, and the artifact
-    # stamps open_groups_src=cached|computed so "read, not recomputed"
-    # is checkable from the artifact alone.
-    "rollup_maintain_serve_v2_auto_est": lambda s, d: _rollup_maintain_serve(
-        s, d, state_partitions="auto", expected_open_groups="estimate"
     ),
     "zorder_write_pruned_read": lambda s, d: _zorder_write_pruned_read(s, d),
 }
@@ -236,20 +216,9 @@ LEG_ROLES = {
         "hand-sized twin (state_partitions=8; quantifies the dial)"
     ),
     "rollup_maintain_serve_v2_auto": (
-        "static-open-groups control (state_partitions='auto' with the "
-        "static default 8; demoted since r14 to "
-        "SPARK_GRAFT_BENCH_CONTROL=1 runs — the shipped default is "
-        "the _auto_est leg)"
-    ),
-    "rollup_maintain_serve_v2_auto_est": (
-        "shipped default (state_partitions='auto' + persisted "
-        "data-estimated open groups: cached_open_groups reads the "
-        "fingerprint-keyed estimate cached at first start — "
-        "open_groups_src says cached vs computed). Sizing rationale "
-        "(r13 store-count sweep, SCALE.md): the derived 6 stores sit "
-        "ON the wall-optimal 6-8 plateau (spreads overlap) at 0.57x "
-        "the static default's state-commit I/O — the fsync axis that "
-        "dominates at scale with remote checkpoints"
+        "shipped default (state_partitions='auto': derived_state_partitions, "
+        "8 stores per stateful operator at p=12, capped at the session "
+        "width)"
     ),
 }
 
@@ -320,32 +289,15 @@ _ROLLUP_PHASES: dict[str, float] = {}
 #: shift (machine); wall up + commit I/O flat = code.
 _ROLLUP_COMMIT_S: list[float] = [0.0]
 
-#: Sizing the LAST _rollup_maintain_serve drain actually ran at —
-#: (state stores, resolved open-groups parameter). The store count is
-#: OBSERVED (max stateOperators[].numShufflePartitions over the
+#: State stores the LAST _rollup_maintain_serve drain actually ran
+#: at: OBSERVED (max stateOperators[].numShufflePartitions over the
 #: drain's progress events), not re-derived, so the artifact records
-#: what the query really did; open_groups is the resolved value the
-#: auto derivation was fed (the estimate, for the _auto_est leg), and
-#: None for legs whose sizing never consumes the parameter (the
-#: session-conf control and the explicit-int sized twin) — stamping
-#: the dead default there would read as a fed-vs-observed divergence,
-#: the exact confusion the stamp exists to remove (r12 review).
-#: r11 verdict item 1a: the auto_est leg ran 1.1-2.5 s slower with
-#: 1.6-1.8x the commit I/O of the static default and NOTHING in the
-#: artifact said the estimator had derived a different store count —
-#: sizing divergence must be diagnosable from the artifact alone.
-_ROLLUP_SIZING: list[tuple[int, int | None]] = [(0, None)]
-
-#: Provenance of the LAST drain's open-groups estimate — "cached"
-#: (read from the fingerprint-keyed sidecar; the shipped steady state)
-#: or "computed" (estimated fresh: first start or stale fingerprint);
-#: None for legs that never estimate. Stamped into the artifact as
-#: open_groups_src (r13 verdict item 3's done-bar: the stamp must show
-#: the estimate was READ, not recomputed).
-_ROLLUP_EST_SRC: list[str | None] = [None]
+#: what the query really did and a sizing divergence is diagnosable
+#: from the artifact alone.
+_ROLLUP_SIZING: list[int] = [0]
 
 
-def _rollup_maintain_serve(s, d, state_partitions=None, expected_open_groups=8):
+def _rollup_maintain_serve(s, d, state_partitions=None):
     """The incremental-rollup lifecycle end to end: streaming
     maintenance (availableNow, watermark-closed appends) into the live
     table, tiered compaction into the base, then the serving read
@@ -364,23 +316,6 @@ def _rollup_maintain_serve(s, d, state_partitions=None, expected_open_groups=8):
     # tiered-read noop write.
     t_enter = time.perf_counter()
     src = _rollup_events_src(s, d)
-    _ROLLUP_EST_SRC[0] = None
-    if expected_open_groups == "estimate":
-        # data-derived sizing parameter (r10 verdict item 4), since
-        # r14 via the PERSISTED estimate (r13 verdict item 3): the
-        # occupancy pre-scan runs once per distinct source fingerprint
-        # and is cached next to the staged source; steady-state starts
-        # — every timed pass after the first warm one — read it. Still
-        # inside the timed region so setup honestly carries whatever
-        # the resolution really cost this pass (fingerprint walk when
-        # cached, full pre-scan when not), with the provenance stamped.
-        from video_stream_processor_spark.streaming.rollup import (
-            cached_open_groups,
-        )
-
-        expected_open_groups, _ROLLUP_EST_SRC[0] = cached_open_groups(
-            s, src, size="1 day", watermark="30 minutes"
-        )
     out = os.path.join(_tmp_root(), "rollup_out")
     shutil.rmtree(out, ignore_errors=True)
     live, base, ckpt = (os.path.join(out, x) for x in ("live", "base", "ckpt"))
@@ -403,7 +338,6 @@ def _rollup_maintain_serve(s, d, state_partitions=None, expected_open_groups=8):
         size="1 day",
         watermark="30 minutes",
         state_partitions=state_partitions,
-        expected_open_groups=expected_open_groups,
     )
     # bounded wait: a hung stream must not cost the round its bench
     # artifact (availableNow drains in seconds here; 600 s is headroom)
@@ -437,20 +371,13 @@ def _rollup_maintain_serve(s, d, state_partitions=None, expected_open_groups=8):
         / 1000.0,
         3,
     )
-    _ROLLUP_SIZING[0] = (
-        max(
-            (
-                int(so.get("numShufflePartitions") or 0)
-                for pr in progress
-                for so in (pr.get("stateOperators") or [])
-            ),
-            default=0,
+    _ROLLUP_SIZING[0] = max(
+        (
+            int(so.get("numShufflePartitions") or 0)
+            for pr in progress
+            for so in (pr.get("stateOperators") or [])
         ),
-        # only the auto derivation consumes expected_open_groups; the
-        # control (session conf) and sized (explicit int) legs never
-        # resolve it, so stamping the dead default would fake a
-        # fed-vs-observed divergence (r12 review)
-        int(expected_open_groups) if state_partitions == "auto" else None,
+        default=0,
     )
     compact_rollup(s, live, base)
     t2 = time.perf_counter()
@@ -535,30 +462,15 @@ HEADLINE = [
     # state_partitions dial, quantified next to the pinned default.
     "rollup_maintain_serve_v2_sized",
     # New-in-r10 (no pin; first number sets the bar): the lifecycle at
-    # the auto default with the STATIC open-groups parameter. Demoted
-    # since r14 to SPARK_GRAFT_BENCH_CONTROL=1 runs alongside the v2
-    # session-conf control (r13 verdict item 3: collapse the three
-    # rollup legs to the pair that measures what ships — the hand-sized
-    # twin and the persisted-estimate default; this leg differed from
-    # _auto_est only by the estimator pre-scan it was there to expose,
-    # which the persisted estimate now amortizes away).
+    # the shipped default, state_partitions="auto".
     "rollup_maintain_serve_v2_auto",
-    # New-in-r11 (no pin; first number sets the bar): the auto
-    # lifecycle with the open-groups parameter estimated from the
-    # source itself (r10 verdict item 4); since r14 the estimate is
-    # persisted + fingerprint-keyed (cached_open_groups), making this
-    # THE shipped-default leg.
-    "rollup_maintain_serve_v2_auto_est",
 ]
 
 #: Legs that re-measure retired/control configurations: run only under
 #: SPARK_GRAFT_BENCH_CONTROL=1 (r11 verdict item 5 demoted the v2
-#: session-conf control; r13 verdict item 3 demoted the static
-#: open-groups _auto twin). Their absence from a default artifact is
-#: the expected record of the demotion, not a regression.
-CONTROL_LEGS = frozenset(
-    {"rollup_maintain_serve_v2", "rollup_maintain_serve_v2_auto"}
-)
+#: session-conf control). Their absence from a default artifact is the
+#: expected record of the demotion, not a regression.
+CONTROL_LEGS = frozenset({"rollup_maintain_serve_v2"})
 
 
 # Timings are only bar-comparable on a quiet machine (r3 shipped a
@@ -655,17 +567,15 @@ def main() -> None:
     # noise floor instead of trusting one number.
     n_timed = 3
     samples: dict[str, list[float]] = {}
-    phase_samples: dict[
-        str, list[tuple[float, dict[str, float], float, tuple, str | None]]
-    ] = {}
+    phase_samples: dict[str, list[tuple[float, dict[str, float], float, int]]] = {}
     lifecycle_legs = tuple(LEG_ROLES)
 
     # Memo provenance (r15 verdict item 7): some legs serve from a
     # derived table the warm passes memoized in-process (llm_minhash
     # shingle arrays / candidates, the PQ codes+trainer) — legitimate
     # steady-state-serving framing, but the artifact must SAY which
-    # legs do, mirroring open_groups_src. A leg is stamped true iff any
-    # of its timed passes was served a memoized checkpoint/artifact.
+    # legs do. A leg is stamped true iff any of its timed passes was
+    # served a memoized checkpoint/artifact.
     def _memo_hit_total() -> int:
         from video_stream_processor_spark.llm.dedup import (
             _CKPT_LOCK,
@@ -688,16 +598,15 @@ def main() -> None:
             if name in lifecycle_legs:
                 # _ROLLUP_PHASES/_ROLLUP_COMMIT_S/_ROLLUP_SIZING hold
                 # the latest invocation's eager phases, summed
-                # state-commit I/O, and observed (stores, open_groups)
-                # sizing; capture per pass so the reported
-                # decomposition is the median pass's, not the last one's
+                # state-commit I/O, and observed store count; capture
+                # per pass so the reported decomposition is the median
+                # pass's, not the last one's
                 phase_samples.setdefault(name, []).append(
                     (
                         ts[-1],
                         dict(_ROLLUP_PHASES),
                         _ROLLUP_COMMIT_S[0],
                         _ROLLUP_SIZING[0],
-                        _ROLLUP_EST_SRC[0],
                     )
                 )
         samples[name] = ts
@@ -722,7 +631,7 @@ def main() -> None:
         med_t = times.get(leg)
         if med_t is None or not leg_samples:
             continue
-        _, ph, commit_s, (stores, open_groups), est_src = min(
+        _, ph, commit_s, stores = min(
             leg_samples, key=lambda tp: abs(tp[0] - med_t)
         )
         eager = round(sum(ph.values()), 3)
@@ -731,21 +640,10 @@ def main() -> None:
             "serve": round(max(med_t - eager, 0.0), 3),
             "commit_io_s": commit_s,
             # observed state-store count (stateOperators[].
-            # numShufflePartitions): the r11 auto_est over-sizing was
-            # invisible precisely because it wasn't in the artifact
-            # (r11 verdict item 1a)
+            # numShufflePartitions), so a sizing divergence is
+            # visible in the artifact itself
             "state_stores": stores,
         }
-        if open_groups is not None:
-            # the open-groups parameter is stamped only for legs whose
-            # auto derivation consumed it (r12 review: a dead default
-            # on the control/sized legs would read as divergence)
-            phases[leg]["open_groups"] = open_groups
-        if est_src is not None:
-            # cached = the fingerprint-keyed sidecar served the
-            # estimate (the shipped steady state); computed = fresh
-            # pre-scan this pass (first start / stale fingerprint)
-            phases[leg]["open_groups_src"] = est_src
         commit_io[leg] = commit_s
 
     # Detail line first, compact headline LAST: the driver wrapper
@@ -759,9 +657,9 @@ def main() -> None:
                 "phases": phases,
                 # which legs' timed passes were served an in-process
                 # memoized derived table (steady-state-serving framing;
-                # see _memo_hit_total above) — provenance, like
-                # open_groups_src, so a reader sees what each number
-                # measures without reading the builders
+                # see _memo_hit_total above) — provenance, so a reader
+                # sees what each number measures without reading the
+                # builders
                 "served_from_memo": {
                     k: v for k, v in served_from_memo.items() if v
                 },

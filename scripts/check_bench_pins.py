@@ -21,7 +21,8 @@ worst relative spread so the reader sees the achieved noise floor next
 to the ratios.  Since round 10 bench.py emits a compact headline line
 (last, <= 2000 chars so the driver's tail capture parses) plus a
 detail line (spread/phases); the checker accepts the merged
-artifact, the compact headline alone, or a driver tail capture, and
+artifact, the compact headline alone, a driver tail capture, or the
+raw two-line stdout of ``python bench.py > artifact.json``, and
 prints each lifecycle leg's maintain WALL next to its summed
 state-store commit I/O — the fsync axis that separates a machine I/O
 regime shift from a code regression — plus (r11) the leg's declared
@@ -70,12 +71,17 @@ def merge_bench_lines(lines: list[str]) -> dict | None:
 
 
 def load_artifact(path: str) -> dict | None:
-    """An artifact in any of its three shapes — merged object,
-    compact headline alone, or a driver capture whose bench line lives
-    in a ``tail`` field — normalized to the one-object form, or None
-    when nothing parseable is found."""
+    """An artifact in any of its four shapes — merged object, compact
+    headline alone, a driver capture whose bench line lives in a
+    ``tail`` field, or ``python bench.py``'s raw stdout (detail line,
+    then headline) — normalized to the one-object form, or None when
+    nothing parseable is found."""
     with open(path) as f:
-        run = json.load(f)
+        text = f.read()
+    try:
+        run = json.loads(text)
+    except ValueError:
+        return merge_bench_lines(text.splitlines())
     if "queries" not in run and "tail" in run:
         recovered = merge_bench_lines(run["tail"].replace("\r", "\n").splitlines())
         if recovered is not None:
@@ -176,10 +182,10 @@ def check(baseline_path: str, bench_path: str) -> int:
             else "maintain wall n/a (headline-only artifact)"
         )
         cio_txt = f"state-commit I/O {cio:.3f}s" if cio is not None else "state-commit I/O n/a"
-        # r12: the observed store count + resolved open-groups sizing
-        # parameter ride the artifact (r11 verdict item 1a — the
-        # auto_est over-sizing was invisible because neither was
-        # recorded); print them so sizing divergence reads off one line
+        # the observed store count rides the artifact; artifacts from
+        # before the open-group estimator was removed (BENCH_r11-r16)
+        # also carry the open-groups parameter it fed. Print both so
+        # sizing divergence reads off one line
         sizing_txt = ""
         if "state_stores" in ph:
             sizing_txt = f", {ph['state_stores']} stores"

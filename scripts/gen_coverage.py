@@ -49,7 +49,7 @@ SUPPLEMENTAL: dict[str, list[str]] = {
     "S11": ["io.load_events_stream", "tests/test_streaming.py"],
     "T1": ["tests/test_station.py::test_station_pipeline_streaming_twin (availableNow)", "tests/test_streaming.py::test_checkpoint_restart_recovers_state (checkpoint-restart recovery; default + RocksDB state stores)"],
     "T2": ["io.load_events_stream file source", "tests/test_streaming.py"],
-    "T3": ["pipeline/sink.foreach_batch_overwrite", "tests/test_station.py", "streaming/rollup.py incremental maintenance + idempotent backfill + tiered compaction (tests/test_rollup.py; CLI `rollup`; driver-oracle evidence: stream_window_counts rollup_1h leg routes through rollup_stats; benched as rollup_maintain_serve_v2 (session-conf control), with the state_partitions dial quantified as rollup_maintain_serve_v2_sized and the shipped 'auto' default as _auto / _auto_est — the latter deriving the open-group estimate from the source itself (estimate_open_groups; tests/test_rollup.py::test_auto_sizing_from_estimated_open_groups) — SCALE.md per-trigger commit-I/O table)"],
+    "T3": ["pipeline/sink.foreach_batch_overwrite", "tests/test_station.py", "streaming/rollup.py incremental maintenance + idempotent backfill + tiered compaction (tests/test_rollup.py; CLI `rollup`; driver-oracle evidence: stream_window_counts rollup_1h leg routes through rollup_stats; benched as rollup_maintain_serve_v2 (session-conf control), with the state_partitions dial quantified as rollup_maintain_serve_v2_sized and the shipped 'auto' default as rollup_maintain_serve_v2_auto (derived_state_partitions: constant 8 open groups × 2^p over 4096 rows per store, floored at 6, capped at the session width; tests/test_rollup.py::test_derived_state_partitions_formula) — SCALE.md per-trigger commit-I/O table)"],
     "T4": ["sources/extractor.py YtDlpExtractor (rate cap + politeness delay params)"],
     "T5": ["streaming/analytics._maybe_watermark", "tests/test_streaming.py::test_watermark_drops_late_data"],
     "T7": [

@@ -102,8 +102,8 @@ def test_bench_emits_contract_json():
         # pinned session-conf control) — the r10 verdict's labeling nit
         assert leg in detail["roles"], detail.get("roles")
         # r12 (r11 verdict item 1a): the OBSERVED store count is
-        # stamped per leg, so a sizing divergence like the r11
-        # auto_est over-sizing is diagnosable from the artifact alone
+        # stamped per leg, so a sizing divergence is diagnosable from
+        # the artifact alone
         assert ph["state_stores"] >= 1, (leg, ph)
     assert detail["phases"]["rollup_maintain_serve_v2"]["commit_io_s"] > 0
     assert "control" in detail["roles"]["rollup_maintain_serve_v2"]
@@ -116,16 +116,6 @@ def test_bench_emits_contract_json():
         detail["phases"]["rollup_maintain_serve_v2"]["state_stores"]
         >= detail["phases"]["rollup_maintain_serve_v2_sized"]["state_stores"]
     )
-    # open_groups is stamped ONLY for legs whose auto derivation
-    # consumed it: the auto leg records the static default, auto_est
-    # records the ESTIMATE it resolved, and the control/sized legs
-    # (which never run the derivation) omit the key — a dead default
-    # there would read as a fed-vs-observed divergence (r12 review)
-    est_ph = detail["phases"]["rollup_maintain_serve_v2_auto_est"]
-    assert est_ph["open_groups"] >= 1
-    assert detail["phases"]["rollup_maintain_serve_v2_auto"]["open_groups"] == 8
-    assert "open_groups" not in detail["phases"]["rollup_maintain_serve_v2"]
-    assert "open_groups" not in detail["phases"]["rollup_maintain_serve_v2_sized"]
 
 
 def test_merge_bench_lines_recovery_shapes():
@@ -180,10 +170,11 @@ def test_merge_bench_lines_recovery_shapes():
 
 
 def test_load_artifact_shapes(tmp_path):
-    """The three artifact shapes the checker accepts: merged object,
+    """The four artifact shapes the checker accepts: merged object,
     driver capture with a recoverable tail, driver capture
-    whose tail is unrecoverable but whose own parse succeeded — and
-    the genuinely-empty pre-r10 case."""
+    whose tail is unrecoverable but whose own parse succeeded, and
+    ``python bench.py``'s raw two-line stdout — and the
+    genuinely-empty pre-r10 case."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     from check_bench_pins import load_artifact
 
@@ -207,6 +198,17 @@ def test_load_artifact_shapes(tmp_path):
         json.dumps({"tail": '{"metric": "headline_query_mix_tot', "parsed": None})
     )
     assert load_artifact(str(dead)) is None
+
+    # raw stdout redirected to a file: detail line, then headline
+    detail = {
+        "metric": "headline_query_mix_detail",
+        "spread": {"q": {"min": 0.9, "med": 1.0, "max": 1.1}},
+        "phases": {},
+    }
+    raw = tmp_path / "raw.json"
+    raw.write_text(json.dumps(detail) + "\n" + json.dumps(head) + "\n")
+    got = load_artifact(str(raw))
+    assert got["value"] == 1.0 and got["spread"] == detail["spread"]
 
 
 def test_check_exit_codes(tmp_path, capsys):

@@ -1130,12 +1130,12 @@ def test_maintenance_state_partitions_sized_equals_default(spark, tmp_path):
 
 
 def test_derived_state_partitions_formula(spark):
-    """The volume-derived sizing is the 2^p state bound over the
-    per-store row target, floored at the measured wall floor (r13
-    sizing sweep: 4 stores cost +29% wall over the 6-8 plateau for
-    <2 s of commit-I/O savings) and capped at the session's shuffle
-    parallelism — it only ever sizes thin state DOWN, never past the
-    configured width."""
+    """The derived sizing is the 2^p state bound of the constant open
+    groups over the per-store row target, floored at the measured wall
+    floor (SCALE.md §3 sweep: 4 stores cost +29% wall over the 6-8
+    plateau for <2 s of commit-I/O savings) and capped at the
+    session's shuffle parallelism — it never sizes past the configured
+    width."""
     from video_stream_processor_spark.streaming.rollup import (
         MIN_DERIVED_STATE_STORES,
         derived_state_partitions,
@@ -1150,303 +1150,14 @@ def test_derived_state_partitions_formula(spark):
         assert derived_state_partitions(spark) == 8
         # p=8 shrinks the bound 16x: ceil(8*256/4096) = 1, floored at 6
         assert derived_state_partitions(spark, p=8) == 6
-        # the raw bound is reachable by lowering the floor explicitly
-        assert derived_state_partitions(spark, p=8, min_stores=1) == 1
-        # many open groups derive back up, capped at the session width
-        assert derived_state_partitions(spark, expected_open_groups=64) == 32
+        # a finer sketch derives back up: ceil(8*16384/4096) = 32
+        assert derived_state_partitions(spark, p=14) == 32
         # a session configured BELOW the floor wins over the floor: the
         # derivation never sizes past the cluster's configured width
         spark.conf.set(key, "4")
         assert derived_state_partitions(spark, p=8) == 4
     finally:
         spark.conf.set(key, prev)
-
-
-def _ts_type_frame(spark, rows):
-    """(ts string, event_type) rows as a typed batch frame."""
-    pdf = pd.DataFrame(rows, columns=["ts", "event_type"])
-    pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-    return spark.createDataFrame(pdf, schema="ts timestamp, event_type string")
-
-
-def test_estimate_open_groups_occupancy(spark):
-    """The r12 estimator measures CONCURRENT occupancy, pinned by exact
-    arithmetic on known-cardinality frames (r11 verdict item 1's done
-    bar). A group (window, type) is open [first event, win_end + wm);
-    the estimate is ceil(time-averaged open intervals), floored at the
-    busiest single window's group count."""
-    from video_stream_processor_spark.streaming.rollup import (
-        estimate_open_groups,
-    )
-
-    # The bench shape in miniature: 5 types, every type active in each
-    # of 10 daily windows (one event at each window start), 30-min wm.
-    # busy = 50 groups x (86400 + 1800) s; span = 10 x 86400 + 1800 s
-    # -> average 5.09 -> ceil 6; peak single window 5 -> estimate 6.
-    # The r11 all-time-cardinality form said 10 here — the over-sizing
-    # the r11 verdict measured at 1.6-1.8x the static default's
-    # state-commit I/O.
-    steady = _ts_type_frame(
-        spark,
-        [
-            (f"2024-01-{d + 1:02d} 00:00:00", f"t{k}")
-            for d in range(10)
-            for k in range(5)
-        ],
-    )
-    assert estimate_open_groups(steady, "1 day", "30 minutes") == 6
-
-    # All-time cardinality must NOT leak in: 12 all-time types, but the
-    # two bursts are 100 days apart with 6 disjoint types each — only 6
-    # groups are ever open together (the busiest-window floor; the
-    # time average over the idle gap is far below 1).
-    gapped = _ts_type_frame(
-        spark,
-        [("2024-01-01 00:00:00", f"t{k}") for k in range(6)]
-        + [("2024-04-10 00:00:00", f"u{k}") for k in range(6)],
-    )
-    assert estimate_open_groups(gapped, "1 hour", "30 minutes") == 6
-
-    # NULL is a legitimate state group: groupBy keeps the NULL key
-    nullg = _ts_type_frame(
-        spark, [("2024-01-01 00:00:00", "a"), ("2024-01-01 00:00:00", None)]
-    )
-    assert estimate_open_groups(nullg, "1 hour", "30 minutes") == 2
-
-    # degenerate empty sample still yields a sane positive estimate
-    empty = _ts_type_frame(spark, []).limit(0)
-    assert estimate_open_groups(empty, "1 hour", "30 minutes") == 1
-
-    # a differently-shaped frame fails loudly instead of estimating a
-    # wrong column's concurrency (r11 verdict item 7)
-    with pytest.raises(ValueError, match="group column 'event_type'"):
-        estimate_open_groups(
-            spark.range(1).select(F.lit("x").alias("category")),
-            "1 hour",
-            "30 minutes",
-        )
-    renamed = nullg.withColumnRenamed("event_type", "category")
-    assert (
-        estimate_open_groups(
-            renamed, "1 hour", "30 minutes", group_col="category"
-        )
-        == 2
-    )
-
-    # NULL event times never hold closable state, and Spark's window()
-    # grouping drops them natively (no null-window group) — this pins
-    # that engine behavior so 10 types seen ONLY on null-ts rows can
-    # never push the busiest-window floor toward all-time cardinality;
-    # if a Spark upgrade ever started keeping a null-window bucket,
-    # this assertion fails loudly and the estimator needs an explicit
-    # filter (r12 review: the filter itself is redundant today)
-    nullts = _ts_type_frame(
-        spark,
-        [("2024-01-01 00:00:00", "a"), ("2024-01-01 00:00:00", "b")]
-        + [(None, f"u{k}") for k in range(10)],
-    )
-    assert estimate_open_groups(nullts, "1 hour", "30 minutes") == 2
-    # ... and an all-null-ts sample degrades to the empty-sample floor
-    allnull = _ts_type_frame(spark, [(None, "a"), (None, "b")])
-    assert estimate_open_groups(allnull, "1 hour", "30 minutes") == 1
-
-    # the event-time column is validated like the group column (same
-    # r11-item-7 rationale) and parameterized for renamed sources
-    with pytest.raises(ValueError, match="event-time column 'ts'"):
-        estimate_open_groups(
-            nullg.withColumnRenamed("ts", "event_time"),
-            "1 hour",
-            "30 minutes",
-        )
-    assert (
-        estimate_open_groups(
-            nullg.withColumnRenamed("ts", "event_time"),
-            "1 hour",
-            "30 minutes",
-            ts_col="event_time",
-        )
-        == 2
-    )
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(F.col("timestamp").alias("ts"), F.lit("a").alias("event_type"))
-    )
-    with pytest.raises(ValueError, match="BATCH sample"):
-        estimate_open_groups(stream, "1 hour", "30 minutes")
-
-
-def test_cached_open_groups_amortizes_the_prescan(spark, tmp_path):
-    """r13 verdict item 3: the occupancy pre-scan is a property of the
-    DATA, so `cached_open_groups` persists it keyed by a data
-    fingerprint (sorted relpath/size/mtime listing) + the estimator
-    params, and re-estimates only when either changes. The provenance
-    string is the artifact-checkable half of the done-bar ("the stamp
-    shows the estimate was read, not recomputed")."""
-    import json
-    import os
-
-    from video_stream_processor_spark.streaming.rollup import (
-        _OPEN_GROUPS_FILE,
-        cached_open_groups,
-        estimate_open_groups,
-    )
-
-    src = str(tmp_path / "landing")
-    frame = _ts_type_frame(
-        spark,
-        [
-            (f"2024-01-{d + 1:02d} 00:00:00", f"t{k}")
-            for d in range(10)
-            for k in range(5)
-        ],
-    )
-    frame.write.parquet(src)
-    direct = estimate_open_groups(spark.read.parquet(src), "1 day", "30 minutes")
-
-    # first call computes and persists; value identical to the direct
-    # estimator (the cache is an amortization, never a different answer)
-    est, prov = cached_open_groups(spark, src, size="1 day", watermark="30 minutes")
-    assert (est, prov) == (direct, "computed")
-    cache_path = tmp_path / "landing" / _OPEN_GROUPS_FILE
-    assert cache_path.exists()
-    # the leading-underscore sidecar is invisible to parquet scans —
-    # writing it into the landing dir must not corrupt the source read
-    assert spark.read.parquet(src).count() == 50
-
-    # steady state: read, not recomputed
-    est2, prov2 = cached_open_groups(spark, src, size="1 day", watermark="30 minutes")
-    assert (est2, prov2) == (direct, "cached")
-
-    # different estimator params = a different estimate: param mismatch
-    # is staleness (and the recompute overwrites the cache for the NEW
-    # params, so the old-params caller recomputes next time — last
-    # writer wins, both always correct)
-    _, prov3 = cached_open_groups(spark, src, size="1 hour", watermark="30 minutes")
-    assert prov3 == "computed"
-
-    # data change = fingerprint change: new landing file forces a
-    # re-estimate that SEES the new data
-    more = _ts_type_frame(
-        spark,
-        [(f"2024-01-{d + 1:02d} 00:00:00", f"u{k}") for d in range(10) for k in range(5)],
-    )
-    more.write.mode("append").parquet(src)
-    est4, prov4 = cached_open_groups(spark, src, size="1 day", watermark="30 minutes")
-    assert prov4 == "computed"
-    assert est4 > direct  # 10 concurrent types now, not 5
-
-    # a torn/corrupt cache recomputes instead of crashing or trusting
-    cache_path.write_text("{not json")
-    est5, prov5 = cached_open_groups(spark, src, size="1 day", watermark="30 minutes")
-    assert (est5, prov5) == (est4, "computed")
-
-    # cache_dir= keeps a read-only landing dir pristine
-    alt = str(tmp_path / "cache_home")
-    est6, prov6 = cached_open_groups(
-        spark, src, size="1 day", watermark="30 minutes", cache_dir=alt
-    )
-    assert prov6 == "computed"
-    with open(os.path.join(alt, _OPEN_GROUPS_FILE)) as f:
-        payload = json.load(f)
-    assert payload["open_groups"] == est6
-    assert payload["params"]["size"] == "1 day"
-    est7, prov7 = cached_open_groups(
-        spark, src, size="1 day", watermark="30 minutes", cache_dir=alt
-    )
-    assert (est7, prov7) == (est6, "cached")
-
-
-def test_auto_sizing_from_estimated_open_groups(spark, tmp_path):
-    """End to end on a fixture whose event-type cardinality DIFFERS
-    from the static default's 8-group assumption (12 types): the
-    estimated parameter lands the auto sizing exactly where a human
-    sizing by the same state bound would put it, the checkpoint
-    captures that layout, and the maintained table is row-identical to
-    an explicitly hand-sized run — the static argument stays available
-    as the override (r10 verdict item 4's done bar)."""
-    from video_stream_processor_spark.streaming.rollup import (
-        _checkpointed_state_partitions,
-        derived_state_partitions,
-        estimate_open_groups,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    rows_a = [
-        (i, f"2024-01-01 10:{i % 60:02d}:00", i, f"t{i % 12}", 1.0, "{}")
-        for i in range(24)
-    ]
-    rows_b = [(100, "2024-01-01 12:30:00", 1, "t0", 1.0, "{}")]
-    _land(src, "a.parquet", rows_a)
-    _land(src, "b.parquet", rows_b)
-
-    est = estimate_open_groups(
-        spark.read.parquet(str(src)), "1 hour", "30 minutes"
-    )
-    # the busiest-window floor: all 12 of the 10:00 window's groups are
-    # open together when it closes (the time average alone is ~5.1 —
-    # the 12:30 straggler barely overlaps) — not the static default 8,
-    # and not the r11 form's 24 (all-time cardinality x 2 windows)
-    assert est == 12
-
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "32")
-        # what a human sizing by the 2^p state bound would compute
-        hand = derived_state_partitions(spark, p=8, expected_open_groups=est)
-        # ceil(12 * 2^8 / 4096) = 1, floored at the measured wall floor
-        assert hand == 6
-        live, ckpt = str(tmp_path / "live"), str(tmp_path / "ckpt")
-        q = start_rollup_maintenance(
-            _events_stream(spark, src),
-            live,
-            ckpt,
-            watermark="30 minutes",
-            p=8,
-            expected_open_groups=est,
-        )
-        assert q.awaitTermination(180)
-        live2, ckpt2 = str(tmp_path / "live2"), str(tmp_path / "ckpt2")
-        q2 = start_rollup_maintenance(
-            _events_stream(spark, src),
-            live2,
-            ckpt2,
-            watermark="30 minutes",
-            p=8,
-            state_partitions=hand,
-        )
-        assert q2.awaitTermination(180)
-    finally:
-        spark.conf.set(key, prev)
-    # estimated-auto captured exactly the hand-sized layout...
-    assert _checkpointed_state_partitions(ckpt) == hand
-    parts = {
-        so.get("numShufflePartitions")
-        for pr in q.recentProgress
-        for so in pr.get("stateOperators", [])
-    }
-    assert parts == {hand}
-
-    # ...and computed the identical table
-    def rows(path):
-        df = spark.read.parquet(path).withColumn(
-            "win_start", F.col("win_start").cast("long")
-        )
-        return sorted(
-            (*r[:-1], tuple(r[-1]))
-            for r in map(
-                tuple,
-                df.select(
-                    "win_start", "event_type", "n_events", "n_users_sketch"
-                ).collect(),
-            )
-        )
-
-    got = rows(str(tmp_path / "live"))
-    assert got  # the 10:00 window closed
-    assert got == rows(str(tmp_path / "live2"))
 
 
 def test_auto_state_partitions_default(spark, tmp_path):
@@ -1554,23 +1265,6 @@ def test_local_checkpoint_path_shapes():
         assert lp("file:///x/y") == "/x/y"
 
 
-def test_cli_sizing_would_derive(tmp_path):
-    """The CLI's pre-scan gate (r11 review): the open-groups estimate
-    is only paid when the 'auto' sizing would actually read it — a
-    fresh local checkpoint. An existing checkpoint (resumes captured
-    layout) and a remote one (falls back to session conf) both skip."""
-    from video_stream_processor_spark.__main__ import _sizing_would_derive
-
-    assert _sizing_would_derive(str(tmp_path / "fresh_ckpt")) is True
-    assert _sizing_would_derive("hdfs://nn/ckpt") is False
-    ck = tmp_path / "ck"
-    (ck / "offsets").mkdir(parents=True)
-    (ck / "offsets" / "0").write_text(
-        'v1\n{"conf": {"spark.sql.shuffle.partitions": "8"}}\n{}'
-    )
-    assert _sizing_would_derive(str(ck)) is False
-
-
 def test_cli_state_partitions_parser():
     """--state-partitions accepts 'auto' (default), 'session'/'none'
     (legacy session-conf behavior), or an int."""
@@ -1604,20 +1298,11 @@ def test_cli_state_partitions_parser():
             pr.parse_args(
                 ["rollup", "--table-dir", "t", "--state-partitions", bad]
             )
-    # r11: --expected-open-groups defaults to the data-derived 'auto'
-    # (the static int stays the override) and rejects non-positive
-    assert pr.parse_args(["rollup", "--table-dir", "t"]).expected_open_groups == "auto"
-    assert (
+    # the open-group estimate flag is gone: passing it is a usage error
+    with pytest.raises(SystemExit):
         pr.parse_args(
             ["rollup", "--table-dir", "t", "--expected-open-groups", "24"]
-        ).expected_open_groups
-        == 24
-    )
-    for bad in ("0", "-1", "many"):
-        with pytest.raises(SystemExit):
-            pr.parse_args(
-                ["rollup", "--table-dir", "t", "--expected-open-groups", bad]
-            )
+        )
 
 
 def test_writer_p_guard_enforces_format_boundary(spark, tmp_path):
@@ -1895,86 +1580,3 @@ def test_manifest_writers_are_atomic_under_same_pid_concurrency(tmp_path):
     import os
 
     assert [n for n in os.listdir(base) if n.endswith(".tmp")] == []
-
-
-def test_source_fingerprint_empty_listing_is_none(tmp_path):
-    """r14 advisor: an empty or nonexistent local source must not hash
-    the EMPTY listing — every such source would share one constant
-    fingerprint, so with a shared cache_dir two distinct empty-dir
-    sources could serve each other's cached estimate. None makes the
-    caller compute fresh and never cache (same contract as a remote
-    URI)."""
-    from video_stream_processor_spark.streaming.rollup import (
-        _source_fingerprint,
-    )
-
-    empty = tmp_path / "empty_landing"
-    empty.mkdir()
-    assert _source_fingerprint(str(empty)) is None
-    assert _source_fingerprint(str(tmp_path / "never_created")) is None
-    # sidecar-only dirs list as empty too (underscore entries are
-    # skipped by design) — also no fingerprint
-    side = tmp_path / "sidecars_only"
-    side.mkdir()
-    (side / "_rollup_open_groups.json").write_text("{}")
-    assert _source_fingerprint(str(side)) is None
-    # a real data file still fingerprints, and distinctly per content
-    d = tmp_path / "real"
-    d.mkdir()
-    (d / "part-0.parquet").write_text("x")
-    fp = _source_fingerprint(str(d))
-    assert isinstance(fp, str) and len(fp) == 64
-
-
-def test_cached_open_groups_empty_sources_never_share(spark, tmp_path):
-    """Behavioral half of the r14 advisor fix: two DISTINCT empty-dir
-    sources pointing at one shared cache_dir (the unreachable-today
-    cross-serving setup) each compute from their own events= frame —
-    neither reads the other's estimate, and nothing is cached under
-    the constant empty fingerprint."""
-    import os
-
-    from video_stream_processor_spark.streaming.rollup import (
-        _OPEN_GROUPS_FILE,
-        cached_open_groups,
-    )
-
-    a = tmp_path / "src_a"
-    b = tmp_path / "src_b"
-    a.mkdir()
-    b.mkdir()
-    shared = str(tmp_path / "shared_cache")
-    few = _ts_type_frame(spark, [("2024-01-01 00:00:00", "t0")])
-    many = _ts_type_frame(
-        spark,
-        [("2024-01-01 00:00:00", f"t{k}") for k in range(12)],
-    )
-    est_a, prov_a = cached_open_groups(
-        spark, str(a), size="1 day", watermark="30 minutes",
-        cache_dir=shared, events=few,
-    )
-    est_b, prov_b = cached_open_groups(
-        spark, str(b), size="1 day", watermark="30 minutes",
-        cache_dir=shared, events=many,
-    )
-    assert prov_a == prov_b == "computed"
-    assert est_b > est_a  # b saw ITS data, not a's cached answer
-    assert not os.path.exists(os.path.join(shared, _OPEN_GROUPS_FILE))
-
-
-def test_cli_sizing_cache_dir_resolves_file_scheme(tmp_path):
-    """r14 advisor: the sizing cache dir is an OS-level path, so a
-    file:-scheme --checkpoint (supported everywhere else) must resolve
-    to its local path before '_sizing' is appended — the raw string
-    made os.makedirs create a cwd-relative './file:/...' junk dir that
-    only round-tripped while cwd was stable."""
-    from video_stream_processor_spark.__main__ import _sizing_cache_dir
-
-    plain = str(tmp_path / "ckpt")
-    assert _sizing_cache_dir(plain) == plain + "_sizing"
-    assert _sizing_cache_dir(plain + "/") == plain + "_sizing"
-    assert _sizing_cache_dir(f"file://{plain}") == plain + "_sizing"
-    assert _sizing_cache_dir(f"file:{plain}") == plain + "_sizing"
-    assert (
-        _sizing_cache_dir(f"file://localhost{plain}") == plain + "_sizing"
-    )

@@ -217,40 +217,6 @@ def cmd_prepare_corpus(args: argparse.Namespace) -> int:
     return 0 if n_chunks > 0 else 1
 
 
-def _sizing_would_derive(checkpoint_dir: str) -> bool:
-    """True when start_rollup_maintenance's 'auto' path would actually
-    READ expected_open_groups: a fresh LOCAL checkpoint. An existing
-    checkpoint resumes its captured layout and a remote one falls back
-    to the session conf — in both cases the estimate is discarded, so
-    the caller must not pay the source pre-scan for it."""
-    from .streaming.rollup import (
-        _checkpointed_state_partitions,
-        _local_checkpoint_path,
-    )
-
-    local = _local_checkpoint_path(checkpoint_dir)
-    return local is not None and _checkpointed_state_partitions(local) is None
-
-
-def _sizing_cache_dir(checkpoint_dir: str) -> str:
-    """The sizing-estimate sidecar dir beside a checkpoint:
-    ``<ckpt>_sizing`` as an OS-LEVEL path. Resolves a file:-scheme
-    checkpoint through `_local_checkpoint_path` first (r14 advisor: the
-    raw string made os.makedirs treat ``file:///x_sizing`` as a
-    cwd-relative junk path ``./file:/...``, so the cache never
-    round-tripped). Callers reach here only after `_sizing_would_derive`
-    passed, which guarantees the local resolution is non-None."""
-    from .streaming.rollup import _local_checkpoint_path
-
-    local = _local_checkpoint_path(checkpoint_dir)
-    if local is None:  # pragma: no cover — guarded by _sizing_would_derive
-        raise ValueError(
-            f"_sizing_cache_dir: {checkpoint_dir!r} has no local path; "
-            "callers must gate on _sizing_would_derive first"
-        )
-    return f"{local.rstrip('/')}_sizing"
-
-
 def cmd_rollup(args: argparse.Namespace) -> int:
     """Incrementally-maintained rollup table (streaming/rollup.py) as a
     CLI: the incremental replacement for the reference's 2-hour-cron
@@ -314,44 +280,6 @@ def cmd_rollup(args: argparse.Namespace) -> int:
     from .io import load_events_stream
 
     ckpt = args.checkpoint or f"{args.table_dir.rstrip('/')}_ckpt"
-    open_groups = args.expected_open_groups
-    if open_groups == "auto":
-        open_groups = 8  # the static fallback when the estimate is moot
-        if args.state_partitions == "auto" and _sizing_would_derive(ckpt):
-            # the estimate only feeds the 'auto' state sizing, and only
-            # on a FIRST start (an existing checkpoint resumes its
-            # captured layout; a remote one falls back to session conf)
-            # — derive it from the source itself only then (r10 verdict
-            # item 4; r11 review: the steady-state cron pass must not
-            # pay a full-source pre-scan for a number that is thrown
-            # away)
-            from .io import load_table
-            from .streaming.rollup import cached_open_groups
-
-            # r13 verdict item 3: the estimate is a property of the
-            # DATA — persist it beside the checkpoint keyed by the
-            # source fingerprint, so a table REBUILD (fresh checkpoint,
-            # same landing data: the case that re-enters this branch)
-            # reads it instead of re-paying the occupancy pre-scan.
-            # The frame comes from load_table (the raw fixture events
-            # are TIMESTAMP(NANOS), unreadable bare); the fingerprint
-            # comes from the source file listing.
-            open_groups, est_src = cached_open_groups(
-                spark,
-                os.path.join(args.sf_dir, "events.parquet"),
-                size=args.size,
-                watermark=args.watermark,
-                cache_dir=_sizing_cache_dir(ckpt),
-                events=load_table(spark, args.sf_dir, "events"),
-            )
-            print(
-                f"expected_open_groups={open_groups} ({est_src}: "
-                "time-averaged occupancy of concurrently-open (window, "
-                "type) state groups, floored at the busiest window; "
-                f"persisted beside the checkpoint in *_sizing/) — pass "
-                "--expected-open-groups N to override",
-                file=sys.stderr,
-            )
     q = start_rollup_maintenance(
         load_events_stream(spark, args.sf_dir),
         args.table_dir,
@@ -360,7 +288,6 @@ def cmd_rollup(args: argparse.Namespace) -> int:
         watermark=args.watermark,
         p=args.sketch_p,
         state_partitions=args.state_partitions,
-        expected_open_groups=open_groups,
     )
     if not q.awaitTermination(args.timeout):
         q.stop()
@@ -435,12 +362,14 @@ def cmd_layout(args: argparse.Namespace) -> int:
     return 0 if n > 0 else 1
 
 
-def _sentinel_or_positive_int(v: str, sentinels: dict, noun: str):
-    """Shared validator for the rollup sizing args: a named sentinel
-    (case-insensitive) or a POSITIVE int. Zero/negative used to flow
-    straight into spark.sql.shuffle.partitions at query start and die
-    as an opaque planner error (r10 advisor); ArgumentTypeError keeps
-    the failure an argparse-level usage message."""
+def _state_partitions_arg(v: str) -> int | str | None:
+    """--state-partitions: 'auto', 'session'/'none' (-> None, the
+    legacy session-conf behavior), or a positive int. Zero/negative
+    used to flow straight into spark.sql.shuffle.partitions at query
+    start and die as an opaque planner error (r10 advisor);
+    ArgumentTypeError keeps the failure an argparse-level usage
+    message."""
+    sentinels = {"auto": "auto", "none": None, "session": None}
     low = v.lower()
     if low in sentinels:
         return sentinels[low]
@@ -452,27 +381,10 @@ def _sentinel_or_positive_int(v: str, sentinels: dict, noun: str):
             f"expected {expected} or a positive integer, got {v!r}"
         ) from None
     if n <= 0:
-        raise argparse.ArgumentTypeError(f"{noun} must be positive, got {n}")
+        raise argparse.ArgumentTypeError(
+            f"state-store partition count must be positive, got {n}"
+        )
     return n
-
-
-def _open_groups_arg(v: str) -> int | str:
-    """--expected-open-groups: 'auto' (batch pre-scan of the source
-    estimates the time-averaged occupancy of concurrently-open
-    (window, type) state groups) or a positive int override."""
-    return _sentinel_or_positive_int(
-        v, {"auto": "auto"}, "open-group estimate"
-    )
-
-
-def _state_partitions_arg(v: str) -> int | str | None:
-    """--state-partitions: 'auto', 'session'/'none' (-> None, the
-    legacy session-conf behavior), or a positive int."""
-    return _sentinel_or_positive_int(
-        v,
-        {"auto": "auto", "none": None, "session": None},
-        "state-store partition count",
-    )
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -575,16 +487,6 @@ def build_parser() -> argparse.ArgumentParser:
                     "2^p state bound, existing ones resume the captured "
                     "layout; 'session' keeps the session "
                     "spark.sql.shuffle.partitions untouched")
-    pr.add_argument("--expected-open-groups", type=_open_groups_arg,
-                    default="auto",
-                    help="open (window, event_type) group estimate "
-                    "feeding the 'auto' sizing (event-type cardinality "
-                    "x concurrently-open windows). Default 'auto' "
-                    "derives it from the source itself (one bounded "
-                    "approx-distinct pre-scan, only when the sizing "
-                    "will actually be used); pass an int to override "
-                    "for streams whose landing sample under-represents "
-                    "the type mix")
     pr.add_argument("--limit", type=int, default=10)
     pr.add_argument("--timeout", type=int, default=600,
                     help="max seconds for one maintenance pass; exceeding "

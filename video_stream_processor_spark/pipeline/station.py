@@ -53,7 +53,18 @@ def enrich_links(
     partitions: int | None = None,
 ) -> DataFrame:
     """S3/U1: dedup (O5, before the expensive call — :330), spread,
-    enrich via Arrow-batched mapInPandas."""
+    enrich via Arrow-batched mapInPandas.
+
+    Dedup semantics differ from the reference in streaming mode. On a
+    streaming source (``read_links(streaming=True)`` with a
+    checkpoint), ``dropDuplicates(["url"])`` keeps every URL it has
+    seen in state, and a URL enters that state BEFORE enrichment: a URL
+    whose enrichment failed (dropped as ``stream_url IS NULL``) is
+    never enriched again, even if it lands in a later links file. The
+    reference re-reads ``links.txt`` on every run
+    (video_processor.py:325-336), so it retries such a URL each cron
+    cycle. A batch run here dedups within the run only and behaves like
+    the reference."""
     df = links
     if dedup:
         df = df.dropDuplicates(["url"])

@@ -337,402 +337,55 @@ def _checkpointed_state_partitions(checkpoint_dir: str) -> int | None:
         return None
 
 
-def estimate_open_groups(
-    events: DataFrame,
-    size: str = "1 hour",
-    watermark: str = "30 minutes",
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> int:
-    """Data-derived estimate of CONCURRENTLY-open (window, group)
-    groups — the one free parameter of the auto state sizing, measured
-    from the stream itself instead of the static default.
+#: Open (window, event_type) groups the derived store count is sized
+#: for: an hourly rollup over a handful of event types, with the
+#: trailing window still open for the watermark's length.
+DERIVED_OPEN_GROUPS = 8
 
-    The r11 form multiplied ALL-TIME group cardinality by a worst-case
-    open-window count (ceil(watermark/size) + 1) — both factors
-    over-count what state sizing actually pays for (r11 verdict item
-    1): a type active only in January must not reserve a year-round
-    store, and a trailing window generation is open only for the
-    ``watermark`` TAIL of each window, not for a whole extra window of
-    wall time (30 min of overlap out of a 1-day window is ~2% store
-    occupancy, not +100%). Measured on the bench fixture the old form
-    derived 10 stores where the occupancy answer is 6 and the
-    hand-validated static default was 8 — the estimate was the only
-    auto leg consistently slower than the static default it exists to
-    replace, with 1.6-1.8x its state-commit I/O.
+#: Stage-1 state rows one state store should hold at most.
+ROWS_PER_STATE_STORE = 4096
 
-    This form measures occupancy. A group (window w, group value g)
-    holds a state store entry from its FIRST event until the watermark
-    passes the window end — the open interval
-    ``[min(ts in (w,g)), w.end + watermark)`` in event time (the
-    watermark tracks max event time). The estimate is the
-    TIME-AVERAGED number of simultaneously-open intervals,
-
-        ceil( sum over groups of (close - open)  /  (max close - min open) ),
-
-    floored at the busiest single window's group count (a sample with
-    long idle gaps dilutes the average, but every group of one window
-    is genuinely open together when that window closes). Per-trigger
-    state-commit I/O is paid on EVERY trigger while overlap peaks last
-    a watermark — sizing to sustained occupancy, with the 2^p
-    worst-case rows-per-group bound already providing headroom for the
-    brief doubling inside the overlap tail.
-
-    ``events`` must be a BATCH frame over the same source the
-    maintainer will stream — at cluster scale pass a bounded,
-    time-contiguous sample (a few landing files, not the full 100 TB
-    table): occupancy is a ratio, so a representative slice estimates
-    it as well as the full history. Cost: one action over two bounded
-    shuffles — (window, group) min-ts partials, then per-window
-    rollups — the same key shape (and therefore the same skew
-    behavior) as the rollup aggregation being sized, on the sample.
-
-    ``group_col`` / ``ts_col`` must name the SAME columns
-    `start_rollup_maintenance` aggregates over (keyed on
-    ``event_type``, windowed on ``ts``); both are parameters so a
-    differently-shaped frame fails loudly here instead of silently
-    estimating the wrong column's concurrency (r11 verdict item 7).
-    NULL group values count — a NULL group holds state like any other,
-    and groupBy keeps the NULL key natively. NULL event times do NOT
-    count, and need no filter: Spark's ``window()`` grouping drops
-    null-event-time rows natively (probe-verified on this build — no
-    null-window group is produced), matching the streaming semantics
-    where such rows never hold closable state; the test suite pins
-    that native behavior so an engine change would fail loudly.
-
-    Use: ``start_rollup_maintenance(..., expected_open_groups=
-    estimate_open_groups(spark.read.parquet(first_files), size, wm))``.
-    The static argument stays the override for workloads whose
-    landing sample under-represents the type mix."""
-    import math
-
-    from .analytics import interval_ns
-
-    if events.isStreaming:
-        raise ValueError(
-            "estimate_open_groups needs a BATCH sample of the source "
-            "(estimating occupancy runs an action, which a streaming "
-            "frame cannot); spark.read the landing dir's first file(s)"
-        )
-    if group_col not in events.columns:
-        raise ValueError(
-            f"estimate_open_groups: group column {group_col!r} is not in "
-            f"the sample's columns {events.columns}; pass the column "
-            "start_rollup_maintenance groups by (its rollup aggregation "
-            "is keyed on 'event_type')"
-        )
-    if ts_col not in events.columns:
-        raise ValueError(
-            f"estimate_open_groups: event-time column {ts_col!r} is not "
-            f"in the sample's columns {events.columns}; pass the column "
-            "start_rollup_maintenance windows on (its rollup aggregation "
-            "windows 'ts')"
-        )
-    wm_s = interval_ns(watermark) / 1_000_000_000
-
-    # timestamp -> double is epoch seconds (sub-second preserved); the
-    # leading cast("timestamp") is a no-op for LTZ and legalizes NTZ
-    # (which cannot cast to double directly) — the session-tz offset it
-    # introduces cancels in every difference below
-    def _epoch(col):
-        return col.cast("timestamp").cast("double")
-
-    per_group = (
-        # null event times drop out of window() natively (no
-        # null-window group — probe-verified, pinned in tests), the
-        # same fate they meet in the streaming aggregation being sized
-        events.groupBy(F.window(ts_col, size).alias("_w"), F.col(group_col))
-        .agg(F.min(_epoch(F.col(ts_col))).alias("_open"))
-        .select(
-            "_w",
-            "_open",
-            (_epoch(F.col("_w.end")) + F.lit(wm_s)).alias("_close"),
-        )
-    )
-    per_window = per_group.groupBy("_w").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col("_close") - F.col("_open")).alias("_busy"),
-        F.min("_open").alias("_lo"),
-        F.max("_close").alias("_hi"),
-    )
-    row = per_window.agg(
-        F.sum("_busy").alias("busy"),
-        F.min("_lo").alias("lo"),
-        F.max("_hi").alias("hi"),
-        F.max("_n").alias("peak"),
-    ).first()
-    if row is None or row["lo"] is None:
-        return 1  # empty sample: a sane positive minimum
-    # span > 0 whenever rows exist: close = win_end + wm > open always
-    avg = row["busy"] / (row["hi"] - row["lo"])
-    return max(math.ceil(avg), int(row["peak"]))
-
-
-#: Sidecar cache for `cached_open_groups` — leading underscore so a
-#: parquet scan of the source dir never lists it (same convention as
-#: `_HWM_FILE` / `_WRITER_FILE`).
-_OPEN_GROUPS_FILE = "_rollup_open_groups.json"
-
-#: Bump when `estimate_open_groups`'s formula changes meaning: a cache
-#: written by the r11 all-time-cardinality form must not serve the r12
-#: occupancy form's callers (the same loud-staleness contract as
-#: `ROLLUP_FORMAT_VERSION`, applied to the estimator).
-_OPEN_GROUPS_CACHE_VERSION = 1
-
-
-def _source_fingerprint(local_dir: str) -> str | None:
-    """Content-identity of a landing dir for estimate staleness: the
-    sha256 of its sorted (relative path, size, mtime_ns) data-file
-    listing, or None when the path has no data files to fingerprint
-    (nonexistent, or a dir whose walk yields nothing). Metadata-only —
-    no file is opened, so fingerprinting a 100 TB table costs one
-    directory walk, the same listing cost Spark's own file index pays
-    every read. Underscore/dot-prefixed entries are skipped: sidecars
-    (including the estimate cache itself) and ``_spark_metadata`` must
-    not churn the fingerprint they key.
-
-    The None (instead of hashing the empty listing) matters: every
-    empty source would otherwise share ONE constant fingerprint, so
-    with a shared cache_dir two distinct empty-dir sources could serve
-    each other's cached estimate (r14 advisor). None makes the caller
-    compute fresh and never cache, same as a remote URI."""
-    import hashlib
-    import os
-
-    entries = []
-    if os.path.isfile(local_dir):
-        # single-file source (the fixture tables are one parquet file
-        # each): fingerprint that file — an empty walk here would give
-        # every file source the SAME fingerprint, silently serving one
-        # source's estimate for another
-        st = os.stat(local_dir)
-        entries.append(
-            f"{os.path.basename(local_dir)}:{st.st_size}:{st.st_mtime_ns}"
-        )
-    else:
-        for root, dirs, files in os.walk(local_dir):
-            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-            for name in sorted(files):
-                if name.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, name)
-                st = os.stat(p)
-                rel = os.path.relpath(p, local_dir)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    if not entries:
-        return None
-    return hashlib.sha256("\n".join(entries).encode()).hexdigest()
-
-
-def cached_open_groups(
-    spark: SparkSession,
-    source_dir: str,
-    size: str = "1 hour",
-    watermark: str = "30 minutes",
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    cache_dir: str | None = None,
-    events: DataFrame | None = None,
-) -> tuple[int, str]:
-    """`estimate_open_groups` with the result PERSISTED next to the
-    source (r13 verdict item 3): the occupancy pre-scan is a real
-    action over the sample (0.45-0.68 s on the bench fixture), and a
-    caller that re-creates checkpoints over the same landing data —
-    reprocessing runs, table rebuilds, every bench pass — was paying
-    it per start. The estimate is a property of the DATA, not of the
-    checkpoint, so it is cached keyed by a data fingerprint (sorted
-    file listing: relpath/size/mtime — see `_source_fingerprint`) plus
-    the exact estimator parameters, and recomputed only when either
-    changes.
-
-    Returns ``(estimate, provenance)`` where provenance is
-    ``"cached"`` (read, fingerprint + params matched) or
-    ``"computed"`` (estimated fresh this call — and re-cached when the
-    cache location is writable). Callers that stamp sizing provenance
-    into artifacts (bench.py's lifecycle legs) record the provenance
-    string so "the estimate was read, not recomputed" is checkable
-    from the artifact alone.
-
-    The cache file lives IN the source dir by default
-    (``_rollup_open_groups.json`` — the leading underscore keeps it
-    invisible to parquet scans, like the compaction manifest); pass
-    ``cache_dir`` to keep a read-only landing dir pristine (the CLI
-    caches beside the checkpoint, ``<ckpt>_sizing/``). A remote
-    source URI (hdfs://, s3a://) has no local listing to fingerprint,
-    so staleness cannot be detected and the estimate is computed
-    fresh each call there — carry the returned int explicitly at
-    cluster scale (caching without a fingerprint would silently serve
-    a stale estimate, the one failure mode worse than re-scanning).
-
-    ``events`` overrides the frame the estimator scans while the
-    FINGERPRINT still comes from ``source_dir``'s listing: sources
-    whose raw files need a normalizing loader (the fixture's
-    TIMESTAMP(NANOS) events need ``io.load_table``, which a bare
-    ``spark.read.parquet`` refuses) pass their loaded frame here."""
-    import json
-    import os
-    import warnings
-
-    local_src = _local_checkpoint_path(source_dir)
-    params = {
-        "size": size,
-        "watermark": watermark,
-        "group_col": group_col,
-        "ts_col": ts_col,
-    }
-
-    def _compute() -> int:
-        sample = spark.read.parquet(source_dir) if events is None else events
-        return estimate_open_groups(
-            sample,
-            size=size,
-            watermark=watermark,
-            group_col=group_col,
-            ts_col=ts_col,
-        )
-
-    if local_src is None and cache_dir is None:
-        return _compute(), "computed"
-    if cache_dir is not None:
-        cache_home = cache_dir
-    elif local_src is not None and os.path.isdir(local_src):
-        cache_home = local_src
-    else:
-        # single-FILE source with no cache_dir: the file's parent may
-        # be a read-only fixture dir this code must not write into —
-        # compute fresh and say how to amortize
-        warnings.warn(
-            f"cached_open_groups: source {source_dir!r} is a single "
-            "file and no cache_dir was given; computing fresh — pass "
-            "cache_dir= to persist the estimate",
-            stacklevel=2,
-        )
-        return _compute(), "computed"
-    fingerprint = None if local_src is None else _source_fingerprint(local_src)
-    cache_path = os.path.join(cache_home, _OPEN_GROUPS_FILE)
-    if os.path.exists(cache_path):
-        try:
-            with open(cache_path) as f:
-                cached = json.load(f)
-        except (OSError, ValueError):
-            cached = None  # torn/unreadable cache: recompute below
-        if (
-            isinstance(cached, dict)
-            and cached.get("cache_version") == _OPEN_GROUPS_CACHE_VERSION
-            and cached.get("params") == params
-            and fingerprint is not None
-            and cached.get("fingerprint") == fingerprint
-        ):
-            return int(cached["open_groups"]), "cached"
-    est = _compute()
-    if fingerprint is not None:
-        try:
-            _atomic_write_json(
-                cache_home,
-                _OPEN_GROUPS_FILE,
-                {
-                    "cache_version": _OPEN_GROUPS_CACHE_VERSION,
-                    "fingerprint": fingerprint,
-                    "params": params,
-                    "open_groups": int(est),
-                },
-            )
-        except OSError as e:
-            # read-only landing dir: the estimate is still correct,
-            # only unamortized — say so instead of failing the start
-            warnings.warn(
-                f"cached_open_groups: could not persist the estimate at "
-                f"{cache_path!r} ({e}); every start will re-pay the "
-                "pre-scan — pass cache_dir= to a writable location",
-                stacklevel=2,
-            )
-    return est, "computed"
-
-
-#: Wall floor for the derived store count (r12 verdict item 1, settled
-#: with data in round 13): a store-count sweep at fixed bench data
-#: measured a U-shaped wall — 4 stores cost +29% wall over the 6-8
-#: plateau (maintain 11.4 s vs 9.0 s) while saving under 2 s of commit
-#: I/O, because below the plateau the per-trigger drain loses task
-#: parallelism faster than thin-store fsyncs get cheaper. Above the
-#: plateau the fsync axis takes over (12 stores: +12% wall at 2.8x the
-#: commit I/O; 16: +24% at 6.5x). The occupancy estimate's job is the
-#: HIGH side (don't pay 32 session-default stores for 6 open groups);
-#: this floor guards the LOW side for thin-estimate workloads. A
-#: measured machine-class default, overridable per call.
-#:
-#: Provenance: the sweep ran on a 32-CPU local-disk box at 1-min load
-#: 0.32, 2026-08-16, med-of-3 per point (SCALE.md "r13 store-count
-#: sizing sweep" raw block, in git history at commit ab08286). The
-#: low-side parallelism-loss knee moves with core count, so a different
-#: machine class re-measures before trusting this floor.
+#: Wall floor for the derived store count. A store-count sweep on a
+#: 32-core local-disk box (SCALE.md §3) measured a U-shaped wall: 4
+#: stores cost +29% wall over the 6-8 plateau, because below it the
+#: per-trigger drain loses task parallelism faster than thin-store
+#: fsyncs get cheaper; above it commit I/O takes over (12 stores: +12%
+#: wall at 2.8x the commit I/O). The knee moves with core count, so a
+#: different machine class re-measures before trusting this floor.
 MIN_DERIVED_STATE_STORES = 6
 
 
-def derived_state_partitions(
-    spark: SparkSession,
-    p: int | None = None,
-    expected_open_groups: int = 8,
-    target_rows_per_store: int = 4096,
-    min_stores: int = MIN_DERIVED_STATE_STORES,
-) -> int:
-    """Volume-derived stateful-shuffle sizing for the rollup
-    maintainer, from the one state bound this format guarantees:
-    stage-1 streaming state holds at most ``open_groups × 2^p`` rows
-    (measured at saturation — SCALE.md r9), where open_groups is the
-    number of concurrently-open (window, event_type) groups — measure
-    it from a batch sample with `estimate_open_groups` (time-averaged
-    state-group occupancy).
+def derived_state_partitions(spark: SparkSession, p: int | None = None) -> int:
+    """Stateful-shuffle width (state stores per stateful operator) for
+    a NEW rollup checkpoint:
 
-    Probe-measured on this build, each micro-batch pays one
-    state-store delta-file commit (create+fsync) per stateful operator
-    per shuffle partition REGARDLESS of row volume — per-trigger fixed
-    I/O that dominates when stores are thin (commitTimeMs was ~85% of
-    addBatch at 32 stores over ~25k-row triggers; sizing to 8 cut
-    summed commit I/O ~20x). So: enough partitions that each store
-    stays under ``target_rows_per_store`` state rows, and no more,
-    floored at ``min_stores`` (`MIN_DERIVED_STATE_STORES` — the
-    measured LOW side of the wall curve, where per-trigger drain
-    parallelism loss outruns the marginal fsync savings) and capped at
-    the session's shuffle parallelism (a 1000-executor cluster with
-    many open groups derives right back up to its configured width —
-    the cap keeps this a sizing-down of thin state, never a sizing-up
-    past the cluster's configured parallelism; a session configured
-    BELOW the floor wins over the floor for the same reason).
+        min(max(ceil(DERIVED_OPEN_GROUPS * 2^p / ROWS_PER_STATE_STORE),
+                MIN_DERIVED_STATE_STORES),
+            spark.sql.shuffle.partitions)
+
+    Stage-1 state holds at most ``open groups × 2^p`` rows (SCALE.md
+    §2), and every micro-batch pays one delta-file commit per store per
+    stateful operator whatever its row volume, so the rule takes as
+    many stores as keep each under ``ROWS_PER_STATE_STORE`` rows, no
+    fewer than the measured floor, and never more than the session's
+    configured parallelism. At the default p=12 that is 8 stores.
 
     Small boxes: `get_spark` sets the session width to the core count,
-    so below ``min_stores`` cores the session cap, not the floor, sets
-    the store count, and each stateful stage runs in one task wave. The
-    floor's sweep ran on 32 cores, where 4 stores left cores idle; on 4
-    cores, 4 stores are every core. There the maintainer's two chained
-    aggregations run 4 stores each (8 in all) instead of 8 (16 in all,
-    two waves), and perfbench's rollup_refresh cycle median fell from
-    4.83 to 3.86 s (10 seeds each).
-
-    Fsync-regime caveat (r15, measured — SCALE.md "Degraded-window
-    6-vs-8 point"): the quiet-window 6-8 wall plateau INVERTS when
-    the checkpoint disk is fsync-contended — under a deliberate
-    fsync hammer 8 stores beat 6 on wall by 16% (10.7 vs 12.4 s at
-    the bench fixture), because fewer/fatter stores serialize more
-    commit latency behind the contended queue (the
-    BENCH_r14_CONTROL_DIAG concentration effect, reproduced on
-    purpose). The floor stays 6 because summed commit VOLUME — still
-    0.59x at 6 — is the axis that scales to remote checkpoint stores,
-    where per-commit latency is a storage round-trip a local hammer
-    does not model and total I/O dominates; a deployment whose
-    checkpoint disk is known-contended passes ``min_stores=8`` (or
-    sizes explicitly) to buy the wall back.
+    so with ``MIN_DERIVED_STATE_STORES`` cores or fewer the session
+    cap sets the count (4 stores per operator on 4 cores) and each
+    stateful stage runs in one task wave. A workload with many more
+    open groups, or a checkpoint disk known to be fsync-contended
+    (where 8 stores beat 6 on wall, SCALE.md §3), passes
+    ``state_partitions=N`` to `start_rollup_maintenance` instead.
     """
     import math
 
     from ..operators import hll
 
-    bound = max(1, int(expected_open_groups)) * (
-        2 ** (hll.DEFAULT_P if p is None else int(p))
-    )
-    derived = max(1, math.ceil(bound / max(1, int(target_rows_per_store))))
+    rows = DERIVED_OPEN_GROUPS * 2 ** (hll.DEFAULT_P if p is None else int(p))
+    derived = math.ceil(rows / ROWS_PER_STATE_STORE)
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return min(max(derived, int(min_stores)), session)
+    return min(max(derived, MIN_DERIVED_STATE_STORES), session)
 
 
 def start_rollup_maintenance(
@@ -744,7 +397,6 @@ def start_rollup_maintenance(
     available_now: bool = True,
     p: int | None = None,
     state_partitions: int | None | str = "auto",
-    expected_open_groups: int = 8,
 ) -> StreamingQuery:
     """Start the incremental maintainer: append-mode windowed agg into
     a ``win_start``-partitioned parquet table.
@@ -767,37 +419,24 @@ def start_rollup_maintenance(
     same at every p, so Spark's own checkpoint validation would pass a
     mismatched restart silently — r12 review).
 
-    ``state_partitions`` sizes the stateful shuffle (and therefore the
-    number of state-store instances) for THIS query. Measured on this
-    build, each micro-batch pays ~(2 stateful operators ×
-    ``spark.sql.shuffle.partitions``) state-store delta-file commits
-    regardless of row volume — per-trigger fixed I/O that dominates a
-    small drain (SCALE.md: the probe-measured commitTimeMs is ~85% of
-    addBatch at sf0.1's ~25k rows/trigger under the session default of
-    32). Size it to trigger volume: small per-trigger volume → fewer
-    partitions; a 1000-executor cluster ingesting 100 TB/day sizes UP
-    so each store's delta stays small. Like ``p`` it is captured into
-    the checkpoint at first start (Spark replays the checkpointed
-    shuffle partitioning on restart), so changing it needs a fresh
-    checkpoint. Implemented by pinning the session conf around
-    ``start()`` — the value is read once at query planning; callers
-    starting queries concurrently from other threads should serialize
-    starts (the CLI and bench are single-threaded).
+    ``state_partitions`` sets the stateful shuffle width, and so the
+    number of state stores, for THIS query. Each micro-batch pays one
+    delta-file commit per store per stateful operator (two operators
+    here) whatever its row volume, so a small drain wants few stores
+    and a large ingest wants more. Spark captures the width into the
+    checkpoint at first start and replays it on restart, so changing
+    it needs a fresh checkpoint. It is applied by pinning the session
+    conf around ``start()``; callers starting queries from several
+    threads should serialize starts.
 
-    Since round 10 the DEFAULT is ``"auto"`` (r9 quantified the dial —
-    sized 8.82 s vs session-default 11.13 s in the same artifact — and
-    the r9 verdict ordered it defaulted): a NEW local checkpoint
-    starts at `derived_state_partitions` (the 2^p state-bound sizing);
-    an EXISTING checkpoint resumes at whatever it captured, silently
-    and correctly (resuming the captured layout is the contract, not a
-    disagreement). Pass an int to size explicitly (a disagreeing
-    restart raises), or ``None`` to keep the session conf untouched
-    (the pre-r10 behavior; the bench's pinned v2 leg uses this).
-    ``expected_open_groups`` feeds the auto derivation — measure it
-    from a batch sample of the source with `estimate_open_groups`
-    (time-averaged occupancy of (window, event_type) state groups); a
-    workload with many event types should raise it (the derivation
-    caps at the session parallelism either way).
+    * ``"auto"`` (default): a NEW local checkpoint starts at
+      `derived_state_partitions` (8 stores at p=12, capped at the
+      session width: 4 on a 4-core box); an EXISTING checkpoint
+      resumes the width it captured, and a remote one, which cannot
+      be inspected from here, keeps the session conf.
+    * an int: size explicitly; a restart that disagrees with the
+      captured width raises instead of being silently ignored.
+    * ``None``: leave the session conf untouched.
     """
     resolved: int | None
     local_ckpt = _local_checkpoint_path(checkpoint_dir)
@@ -813,11 +452,7 @@ def start_rollup_maintenance(
             # regardless of conf; don't pin, don't second-guess
             resolved = None
         else:
-            resolved = derived_state_partitions(
-                events_stream.sparkSession,
-                p=p,
-                expected_open_groups=expected_open_groups,
-            )
+            resolved = derived_state_partitions(events_stream.sparkSession, p=p)
     elif state_partitions is not None:
         # Like p, the stateful shuffle partitioning is captured into
         # the checkpoint at first start; on restart Spark silently
